@@ -31,33 +31,25 @@ external DuckDB oracle must reproduce the run bit-for-bit):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_fuel_priceguide_ec2_spark.operators.util import (
-    mat_lit,
-    mat_sql,
-    plan_barrier,
-)
+from etl_fuel_priceguide_ec2_spark.operators.util import mat_sql, plan_barrier
 
 
 def sq_dists_sql(vec_text: str, mat_text: str) -> str:
-    """The centroid-distance fold as SQL TEXT — the string twin of
-    :func:`sq_dists_expr`'s HOF construction, token-for-token the same
-    Catalyst tree (``(x - y) * (x - y)`` products, ``0.0D`` init,
-    left-fold adds). Exists because the Python HOF builders pay ~10
-    py4j round-trips per nested lambda: a 16-subspace PQ build makes
-    34 fold expressions and the gateway chatter alone measured ~1 s of
-    warm-query wall. Rendering the fold as one parsed string removes
-    that driver-side cost without touching the executed plan
-    (bit-identity with the HOF form is test-pinned). Keep BOTH forms
-    here, adjacent, so a rounding- or fold-order change cannot land in
-    one and not the other."""
+    """The centroid-distance fold as SQL TEXT: ``transform`` over the
+    matrix, ``(x - y) * (x - y)`` products, ``0.0D`` init, left-fold
+    adds. Rendered as one parsed string because the Python HOF
+    builders pay ~10 py4j round-trips per nested lambda: a 16-subspace
+    PQ build makes 34 fold expressions and the gateway chatter alone
+    measured ~1 s of warm-query wall. The equivalent lambda-HOF fold
+    lives only in the bit-identity test, as the reference."""
     # lambda variables use collision-resistant names: a plain `c` would
     # CAPTURE any column named c referenced by vec_text (lambda scope
     # shadows columns — every distance silently becomes 0); names do
-    # not affect the computed values, so bit-identity with the HOF
-    # form holds. Reserved identifiers: _sqd_c/_sqd_x/_sqd_y/_sqd_a/_sqd_e.
+    # not affect the computed values. Reserved identifiers:
+    # _sqd_c/_sqd_x/_sqd_y/_sqd_a/_sqd_e.
     # The reservation is ENFORCED, not just documented (ADVICE r13): a
     # caller whose vec_text references a column named like the lambda
     # variables would be silently captured — the exact hazard the
@@ -80,45 +72,56 @@ def sq_dists_sql(vec_text: str, mat_text: str) -> str:
     )
 
 
-def sq_dists_expr(vcol, cent_lit):
-    """Per-centroid squared-L2 distances of ``vcol`` against a nested
-    centroid-array literal, as ONE HOF expression (transform over the
-    codebook, zip_with + left fold inside — whole-stage codegen, no
-    shuffle). The single shared definition of the centroid-distance
-    fold: ``_assign``, the fused PQ fit, and the PQ encode/search all
-    use it, so a rounding- or fold-order change can never diverge them
-    (code-review r13 — there were four verbatim copies).
-
-    Fast path: pass ``vcol`` as a SQL string (a resolvable column name
-    or expression) and ``cent_lit`` as a raw matrix (any sequence of
-    row sequences — list, tuple, numpy array), and the whole fold is
-    built via ONE ``F.expr`` parse (:func:`sq_dists_sql`) instead of
-    ~30 py4j lambda round-trips — same tree, test-pinned bit-identical.
-    Column inputs keep the original HOF construction."""
-    from pyspark.sql import Column
-
-    if not isinstance(cent_lit, Column):
-        # normalize ONCE up front: accepts numpy or any sequence-of-rows
-        # and defuses one-shot row iterators (mat_sql would exhaust
-        # them before the fallback re-read — the vec_lit hazard)
-        mat = [[float(x) for x in r] for r in cent_lit]
-        sql = mat_sql(mat)
-        if sql is not None and isinstance(vcol, str):
-            return F.expr(sq_dists_sql(vcol, sql))
-        cent_lit = mat_lit(mat)
-    if isinstance(vcol, str):
-        # F.expr, NOT bare-string pass-through: the HOF builders treat
-        # a string as a quoted column NAME, which breaks expression
-        # strings like "slice(v, 1, 4)" on the non-renderable fallback
-        vcol = F.expr(vcol)
-    return F.transform(
-        cent_lit,
-        lambda c: F.aggregate(
-            F.zip_with(vcol, c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, d: acc + d,
-        ),
+def residual_sql(vec_text: str, idx_text: str, mat_text: str) -> str:
+    """``vec - mat[idx]`` as SQL TEXT: the vector minus the matrix row
+    that ``idx_text`` (a 1-based INT expression, typically the own-cell
+    argmin) selects — the ONE definition of the IVF residual used by
+    the residual PQ fit/encode/search and the two-level codebooks.
+    Callers pass their index expression verbatim so each site keeps
+    its tuned plan; ``vec_text`` and ``idx_text`` sit outside the
+    ``_rsd_*`` lambda, so they cannot be captured by it."""
+    return (
+        f"zip_with({vec_text}, element_at({mat_text}, {idx_text}), "
+        "(_rsd_x, _rsd_y) -> _rsd_x - _rsd_y)"
     )
+
+
+def sq_dists_expr(vec_text: str, mat) -> Column:
+    """Per-centroid squared-L2 distances of the vector expression
+    ``vec_text`` (a resolvable column name or SQL expression) against
+    the matrix ``mat`` (any sequence of row sequences — list, tuple,
+    numpy array), as ONE HOF expression (transform over the codebook,
+    zip_with + left fold inside — whole-stage codegen, no shuffle)
+    built by ONE ``F.expr`` parse of :func:`sq_dists_sql`. The single
+    shared centroid-distance fold: ``_assign``, the fused PQ fit, and
+    the PQ encode/search all use it, so a rounding- or fold-order
+    change can never diverge them (code-review r13)."""
+    return F.expr(sq_dists_sql(vec_text, mat_sql(mat)))
+
+
+def ranked_probe_cells(dists, cells: int, nprobe: int) -> Column:
+    """The ONE definition of IVF probe-cell ranking (ADVICE r15): given
+    a per-row array of ``cells`` squared distances, return the
+    ``nprobe`` nearest cell ids as ``array<long>``, ranked ascending
+    with ties to the LOWER cell id. Every consumer of the probe set —
+    ``topk_ivf_pq``'s query side, ``cosine_topk_ivf_sq8``,
+    ``cosine_topk_ivf2_sq8``'s per-level probes,
+    ``semantic_dedup_pairs_two_level``'s block probes, and the
+    serving-layer ``probe_cells`` relation that
+    ``prune_codes_to_probed_cells`` /
+    ``ann_query_stream(prune_cells=True)`` act on — MUST fold this
+    expression, never a re-derivation: if ranking ever diverged (fold
+    order, tiebreak, cast), pruning would silently drop cells the
+    search actually probes and return wrong results instead of
+    erroring."""
+    ranked = F.array_sort(
+        F.zip_with(
+            dists,
+            F.sequence(F.lit(0), F.lit(cells - 1)),
+            lambda d, i: F.struct(d.alias("d"), i.alias("cid")),
+        )
+    )
+    return F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cid"].cast("long"))
 
 
 def _fit_sample(base: DataFrame, id_col: str, fit_fraction: float) -> DataFrame:
@@ -267,14 +270,11 @@ def fit_pq_codebooks(
         raise ValueError(f"m, ks, iters must be >= 1 (got {m}, {ks}, {iters})")
     base = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v"))
     if residuals_of is not None:
-        cd = sq_dists_expr("_v", residuals_of)
-        own = F.element_at(
-            mat_lit(residuals_of),
-            (F.array_position(cd, F.array_min(cd))).cast("int"),
-        )
+        mt = mat_sql(residuals_of)
+        cd = sq_dists_sql("_v", mt)
+        own = f"CAST(array_position({cd}, array_min({cd})) AS INT)"
         base = plan_barrier(base.select(
-            F.col(id_col),
-            F.zip_with("_v", own, lambda x, y: x - y).alias("_v"),
+            F.col(id_col), F.expr(residual_sql("_v", own, mt)).alias("_v")
         ))
     h = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10).cast(
         "long"
@@ -575,13 +575,12 @@ def fit_two_level_codebooks(
     ) or _fit_centroids(base, id_col, k1, iters)
     if not c1:
         return [], []
-    cent1 = mat_lit(c1)
-    d1 = sq_dists_expr("_v", c1)
-    primary = (F.array_position(d1, F.array_min(d1)) - 1).cast("int")
-    resid = F.zip_with(
-        "_v", F.element_at(cent1, primary + F.lit(1)), lambda x, c: x - c
+    m1 = mat_sql(c1)
+    d1 = sq_dists_sql("_v", m1)
+    own = f"CAST(array_position({d1}, array_min({d1})) - 1 AS INT) + 1"
+    resid_df = base.select(
+        F.col(id_col), F.expr(residual_sql("_v", own, m1)).alias("_v")
     )
-    resid_df = base.select(F.col(id_col), resid.alias("_v"))
     c2 = _fit_centroids(
         _fit_sample(resid_df, id_col, fit_fraction), id_col, k2, iters
     ) or _fit_centroids(resid_df, id_col, k2, iters)
@@ -645,28 +644,18 @@ def semantic_dedup_pairs_two_level(
             F.lit(None).cast("double").alias("sq_dist"),
         ).filter(F.lit(False))
     k1 = len(c1)  # inputs smaller than k1 yield fewer centroids
-    cent1 = mat_lit(c1)
     # The coarse distance array is carried as an explicit _d1 column:
     # it feeds BOTH the residual's primary-cell lookup and the level-1
     # probe ranking, and an expensive alias referenced more than once
     # is exactly what CollapseProject refuses to inline — so the
     # O(k1·d) fold evaluates once per row instead of twice (r17).
     d1 = sq_dists_expr("_v", c1)
-    primary = (F.array_position(F.col("_d1"), F.array_min("_d1")) - 1).cast("int")
-    resid = F.zip_with(
-        "_v", F.element_at(cent1, primary + F.lit(1)), lambda x, c: x - c
-    )
+    resid = F.expr(residual_sql(
+        "_v",
+        "CAST(array_position(_d1, array_min(_d1)) - 1 AS INT) + 1",
+        mat_sql(c1),
+    ))
     k2 = len(c2)  # same clamp on the residual codebook
-
-    def _rank_blocks(dcol, k):
-        ranked = F.array_sort(
-            F.zip_with(
-                dcol,
-                F.sequence(F.lit(0), F.lit(k - 1)),
-                lambda dd, i: F.struct(dd.alias("d"), i.alias("cid")),
-            )
-        )
-        return F.transform(F.slice(ranked, 1, probes), lambda s: s["cid"].cast("long"))
 
     # NB: no expression barrier here, unlike similarity.py's IVF2
     # corpus side — a same-session A/B measured the barrier 1.3x
@@ -690,8 +679,11 @@ def semantic_dedup_pairs_two_level(
     probed = (
         base.withColumn("_d1", d1)
         .withColumn("_resid", resid)
-        .withColumn("_b1", F.explode(_rank_blocks(F.col("_d1"), k1)))
-        .withColumn("_b2", F.explode(_rank_blocks(sq_dists_expr("_resid", c2), k2)))
+        .withColumn("_b1", F.explode(ranked_probe_cells(F.col("_d1"), k1, probes)))
+        .withColumn(
+            "_b2",
+            F.explode(ranked_probe_cells(sq_dists_expr("_resid", c2), k2, probes)),
+        )
         .withColumn("block", F.col("_b1") * k2 + F.col("_b2"))
     )
     # Plan note (round-12 profile): carrying va through the candidate

@@ -172,6 +172,12 @@ def ngram_jaccard_pairs(
     right answer on both corpus shapes without the caller knowing the
     skew. Callers that KNOW their corpus (benchmarks, fixtures) may pin
     ``False``/``True`` to skip the probe.
+
+    ``checkpoint_dir``: make the prefix path's hashed-set pin a
+    reliable ``.checkpoint()`` (``util.iteration_pin``). The non-prefix
+    path takes no pin, so passing ``checkpoint_dir`` when that path is
+    taken (``prefix_filter=False``, or ``"auto"`` deciding against the
+    prefix pass) raises ``ValueError`` instead of silently ignoring it.
     """
     # ``shingle_sets``: a precomputed ``_shingle_array(df, ...)`` relation
     # (id, shingles: array<string>) — pass it when several miners run over
@@ -203,6 +209,11 @@ def ngram_jaccard_pairs(
             )
             pf = decide_prefix_path(stats)
         if not pf:
+            if checkpoint_dir is not None:
+                raise ValueError(
+                    "ngram_jaccard_pairs: checkpoint_dir applies only to the "
+                    "prefix-filter path, which takes the only pin"
+                )
             # join on xxhash64 of the shingle, not the string: 8-byte shuffle
             # keys instead of 20-40-byte strings → measured 3× faster at
             # sf0.1 with identical results (64-bit collision odds across a
@@ -1008,6 +1019,17 @@ def _positional_kgrams(
     )
 
 
+def _require_gram_cap_for_pin(
+    max_gram_freq: int | None, checkpoint_dir: str | None
+) -> None:
+    # the exact-substring miners pin only the frequency-capped grams
+    if max_gram_freq is None and checkpoint_dir is not None:
+        raise ValueError(
+            "checkpoint_dir applies only with max_gram_freq set: "
+            "the frequency-capped gram relation is the only pin"
+        )
+
+
 def exact_substring_spans(
     df: DataFrame,
     id_col: str,
@@ -1051,7 +1073,12 @@ def exact_substring_spans(
     islands window and the run aggregate share the SAME
     (doc_a, doc_b, diag) partitioning, so detection after the join is
     one exchange. Window partitions are per-(pair, diagonal) — small by
-    construction, no skew pileup."""
+    construction, no skew pileup.
+
+    ``checkpoint_dir``: make the capped-gram pin a reliable
+    ``.checkpoint()`` (``util.iteration_pin``). Only the frequency cap
+    takes a pin, so ``checkpoint_dir`` with ``max_gram_freq=None``
+    raises ``ValueError`` instead of silently ignoring it."""
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
     if min_span_tokens < k:
@@ -1059,6 +1086,7 @@ def exact_substring_spans(
             f"min_span_tokens ({min_span_tokens}) must be >= k ({k}): "
             "spans shorter than one gram are undetectable"
         )
+    _require_gram_cap_for_pin(max_gram_freq, checkpoint_dir)
     grams = _positional_kgrams(df, id_col, text_col, k)
     if max_gram_freq is not None:
         keep = (
@@ -1360,7 +1388,12 @@ def exact_substring_spans_incremental(
     it boilerplate today).
 
     Both inputs are (id, pos, _h) state relations from
-    ``positional_gram_state``; ids must be disjoint."""
+    ``positional_gram_state``; ids must be disjoint.
+
+    ``checkpoint_dir``: make the capped union-gram pin a reliable
+    ``.checkpoint()``; with ``max_gram_freq=None`` there is no pin, and
+    passing it raises ``ValueError``."""
+    _require_gram_cap_for_pin(max_gram_freq, checkpoint_dir)
     allg = history_grams.select(
         F.col(history_grams.columns[0]).alias("_oid"),
         F.col("pos").alias("_opos"),

@@ -847,11 +847,13 @@ def _checked_slice(df: DataFrame, slice_col: str) -> DataFrame:
     silently skew if one side kept rows the other lost. A NULL slice
     id has no meaning in the slice-state model (which ingest slice is
     it?), so the invariant is: slice keys are non-null integers."""
-    dt = df.schema[slice_col].dataType.simpleString()
-    if dt not in ("tinyint", "smallint", "int", "bigint", "long"):
+    from pyspark.sql.types import IntegralType
+
+    dt = df.schema[slice_col].dataType
+    if not isinstance(dt, IntegralType):
         raise ValueError(
             f"slice_col {slice_col!r} must be an integral type (state "
-            f"schema carries it as long), got {dt}"
+            f"schema carries it as long), got {dt.simpleString()}"
         )
     return df.filter(F.col(slice_col).isNotNull())
 
@@ -896,7 +898,10 @@ def embedding_second_moment_state(
     ``slice_col``: compute EVERY slice's state in ONE corpus pass —
     the partial accumulators key on (slice, d) and the merge groups by
     (slice, dim_i, dim_j), so the output is the per-slice states
-    stacked (exactly the union of per-slice calls). Bit-identical to
+    stacked (exactly the union of per-slice calls). The slice column
+    must be integral, and rows whose slice is NULL are DROPPED (they
+    belong to no slice; both moment-state operators drop them, so
+    their states stay joinable). Bit-identical to
     filtering per slice and unioning: accumulation is exact integers
     (int64 fast lane within <=256-row blocks, Python ints beyond), so
     partial grouping/order cannot change any sum (r16 optimization —
@@ -1028,7 +1033,9 @@ def embedding_first_moment_state(
     slice. ``slice_col``: carry the slice key through the explode and
     group by (slice, dim) — every slice's state in ONE corpus pass,
     row-identical to per-slice calls unioned (decimal SUM per group is
-    exact, so the grouping key split cannot change any sum)."""
+    exact, so the grouping key split cannot change any sum). The slice
+    column must be integral, and rows whose slice is NULL are DROPPED,
+    exactly as in ``embedding_second_moment_state``."""
     df = fan_out(df)
     if slice_col is not None:
         df = _checked_slice(df, slice_col)

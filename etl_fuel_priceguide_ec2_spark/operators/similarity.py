@@ -20,7 +20,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from etl_fuel_priceguide_ec2_spark.operators.clustering import sq_dists_expr
+from etl_fuel_priceguide_ec2_spark.operators.clustering import (
+    # ranked_probe_cells is defined in clustering (the two-level block
+    # probes fold it too) and stays importable from this module
+    ranked_probe_cells,
+    residual_sql,
+    sq_dists_expr,
+)
 from etl_fuel_priceguide_ec2_spark.operators.similarity_index import (  # noqa: F401
     # re-exported: the fit/encode side moved to similarity_index
     # (VERDICT r14 item 7) — callers keep importing via this module
@@ -34,31 +40,9 @@ from etl_fuel_priceguide_ec2_spark.operators.similarity_index import (  # noqa: 
 from etl_fuel_priceguide_ec2_spark.operators.util import (
     fan_out,
     mat_lit,
+    mat_sql,
     plan_barrier,
 )
-
-
-def ranked_probe_cells(dists, cells: int, nprobe: int):
-    """The ONE definition of IVF probe-cell ranking (ADVICE r15): given
-    a per-row array of ``cells`` squared distances, return the
-    ``nprobe`` nearest cell ids as ``array<long>``, ranked ascending
-    with ties to the LOWER cell id. Every consumer of the probe set —
-    ``topk_ivf_pq``'s query side, ``cosine_topk_ivf_sq8``,
-    ``cosine_topk_ivf2_sq8``'s per-level probes, and the serving-layer
-    ``probe_cells`` relation that ``prune_codes_to_probed_cells`` /
-    ``ann_query_stream(prune_cells=True)`` act on — MUST fold this
-    expression, never a re-derivation: if ranking ever diverged (fold
-    order, tiebreak, cast), pruning would silently drop cells the
-    search actually probes and return wrong results instead of
-    erroring."""
-    ranked = F.array_sort(
-        F.zip_with(
-            dists,
-            F.sequence(F.lit(0), F.lit(cells - 1)),
-            lambda d, i: F.struct(d.alias("d"), i.alias("cid")),
-        )
-    )
-    return F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cid"].cast("long"))
 
 
 def cosine_topk(
@@ -541,27 +525,21 @@ def cosine_topk_ivf2_sq8(
             F.lit(None).cast("double").alias("approx_cosine"),
         ).filter(F.lit(False))
     k1, k2 = len(c1), len(c2)
-    cent1 = mat_lit(c1)
     _dists = sq_dists_expr  # string fast path: column text + raw matrix
 
     def _primary(d):
         # ties to the lower cell index (first array_position match)
         return (F.array_position(d, F.array_min(d)) - 1).cast("long")
 
-    def _probes(d, kk):
-        return ranked_probe_cells(d, kk, nprobe)
-
-    def _resid(vec_expr, b1):
-        return F.zip_with(
-            vec_expr, F.element_at(cent1, (b1 + 1).cast("int")), lambda x, c: x - c
-        )
+    # v minus its primary coarse centroid (the _b1 column, 0-based)
+    resid = F.expr(residual_sql("v", "CAST(_b1 + 1 AS INT)", mat_sql(c1)))
 
     q8code = F.transform("v", lambda x: F.round(x / F.col("norm") * 127).cast("long"))
 
     # corpus: ONE composite cell (primary coarse, primary residual) + int8
     cb = _with_norm(corpus, id_col, vec_col)
     b1 = _primary(_dists("v", c1))
-    cb = cb.withColumn("_b1", b1).withColumn("_r", _resid(F.col("v"), F.col("_b1")))
+    cb = cb.withColumn("_b1", b1).withColumn("_r", resid)
     # plan_barrier: without it, CollapseProject + join-side predicate/
     # hash generation re-expand the nested d1 -> residual -> d2
     # assignment tree into every reference (~4 evaluations per corpus
@@ -578,7 +556,7 @@ def cosine_topk_ivf2_sq8(
     qb1 = _primary(_dists("v", c1))
     qb = (
         qb.withColumn("_b1", qb1)
-        .withColumn("_r", _resid(F.col("v"), F.col("_b1")))
+        .withColumn("_r", resid)
         .withColumn("_d1", _dists("v", c1))
         .withColumn("_d2", _dists("_r", c2))
     )
@@ -763,40 +741,25 @@ def topk_ivf_pq(
         probed = qb.select(
             F.col(id_col).alias("query_id"), probe_cells, F.col("v")
         )
-        rv = _residual_sql(centroids)
-        if rv is not None:
-            # string fast path + staged residual (same discipline as
-            # the residual pq_encode): project the residual ONCE per
-            # (query, probed cell) row behind a barrier, then build
-            # the m table folds over slices of the projected column
-            probed = plan_barrier(
-                probed.select("query_id", "cell", F.expr(rv).alias("_rv"))
+        # staged residual (same discipline as the residual pq_encode):
+        # project the residual ONCE per (query, probed cell) row behind
+        # a barrier, then build the m table folds over slices of the
+        # projected column
+        probed = plan_barrier(
+            probed.select(
+                "query_id", "cell", F.expr(_residual_sql(centroids)).alias("_rv")
             )
-            q = probed.select(
-                "query_id",
-                "cell",
-                *[
-                    _dists(
-                        f"slice(_rv, {s * sub + 1}, {sub})", pq_codebooks[s]
-                    ).alias(f"adc{s}")
-                    for s in range(m)
-                ],
-            )
-        else:
-            cell_cent = F.element_at(
-                mat_lit(centroids), (F.col("cell") + 1).cast("int")
-            )
-            q_v = F.zip_with("v", cell_cent, lambda x, y: x - y)
-            q = probed.select(
-                "query_id",
-                "cell",
-                *[
-                    _dists(F.slice(q_v, s * sub + 1, sub), pq_codebooks[s]).alias(
-                        f"adc{s}"
-                    )
-                    for s in range(m)
-                ],
-            )
+        )
+        q = probed.select(
+            "query_id",
+            "cell",
+            *[
+                _dists(
+                    f"slice(_rv, {s * sub + 1}, {sub})", pq_codebooks[s]
+                ).alias(f"adc{s}")
+                for s in range(m)
+            ],
+        )
     else:
         # raw vectors: the tables are cell-independent, so compute all
         # m HOF folds ONCE per query alongside the explode instead of

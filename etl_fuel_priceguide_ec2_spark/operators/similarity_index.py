@@ -19,32 +19,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_fuel_priceguide_ec2_spark.operators.clustering import sq_dists_expr
+from etl_fuel_priceguide_ec2_spark.operators.clustering import (
+    residual_sql,
+    sq_dists_expr,
+)
 from etl_fuel_priceguide_ec2_spark.operators.util import (
     fan_out,
-    mat_lit,
     mat_sql,
     plan_barrier,
 )
 
 
-def _residual_sql(centroids) -> str | None:
-    """``v - centroids[cell]`` as ONE SQL expression string (reads the
-    projected ``v`` and ``cell`` columns), or None when the centroid
-    matrix has non-finite values (not renderable as SQL literals). The
-    string form exists for the same reason as ``sq_dists_sql``: the
-    Column construction (mat_lit + a zip_with lambda) pays py4j
-    round-trips per call site, and the residual is referenced by all m
-    sub-code folds. Lambda variables use reserved ``_rsd_*`` names —
-    same capture hazard as ``_sqd_*`` (a column named like them would
-    be shadowed inside the lambda)."""
-    mt = mat_sql(centroids)
-    if mt is None:
-        return None
-    return (
-        f"zip_with(v, element_at({mt}, CAST(cell + 1 AS INT)), "
-        "(_rsd_x, _rsd_y) -> _rsd_x - _rsd_y)"
-    )
+def _residual_sql(centroids) -> str:
+    """``v - centroids[cell]`` as ONE SQL expression string over the
+    projected ``v`` and 0-based ``cell`` columns
+    (:func:`clustering.residual_sql`). Every residual stage projects it
+    ONCE behind a barrier and builds the m sub-code folds over slices
+    of that column — without the stage the coarse fold re-expands into
+    every sub-fold (docs/SCALE.md §7)."""
+    return residual_sql("v", "CAST(cell + 1 AS INT)", mat_sql(centroids))
 
 
 def _pair_sq_dist(cv: str, qv: str):
@@ -123,45 +116,27 @@ def pq_encode(
             f"or generated column name (v/norm/cell/_rv/code0..code{m - 1})"
         )
     sub = dim // m
-    _dists = sq_dists_expr
     cb = _with_norm(corpus, id_col, vec_col)
-    cd = _dists("v", centroids)
+    cd = sq_dists_expr("v", centroids)
     cell_col = (F.array_position(cd, F.array_min(cd)) - 1).cast("long").alias("cell")
+    src = "v"
     if residual:
-        rv = _residual_sql(centroids)
-        if rv is not None:
-            # staged string fast path: project the cell (barrier), then
-            # the residual vector ONCE (barrier), then the m sub-folds
-            # over slices of the projected column — without the stages
-            # the coarse fold re-expands into all 16 sub-folds (17
-            # evaluations per row) and the Column-HOF construction pays
-            # ~16 lambda builds of py4j chatter (docs/SCALE.md §7);
-            # measured 10.3 -> ~2 s per bench rep at sf0.1, same rows.
-            based = plan_barrier(cb.select(F.col(id_col), F.col("v"), cell_col))
-            based = plan_barrier(
-                based.select(F.col(id_col), "cell", F.expr(rv).alias("_rv"))
+        # staged: project the cell (barrier), then the residual vector
+        # ONCE (barrier), then the m sub-folds over slices of the
+        # projected column — without the stages the coarse fold
+        # re-expands into all 16 sub-folds (17 evaluations per row;
+        # docs/SCALE.md §7); measured 10.3 -> ~2 s per bench rep at
+        # sf0.1, same rows.
+        cb = plan_barrier(cb.select(F.col(id_col), F.col("v"), cell_col))
+        cb = plan_barrier(
+            cb.select(
+                F.col(id_col), "cell", F.expr(_residual_sql(centroids)).alias("_rv")
             )
-            code_cols = []
-            for s in range(m):
-                sd = _dists(f"slice(_rv, {s * sub + 1}, {sub})", pq_codebooks[s])
-                code_cols.append(
-                    (F.array_position(sd, F.array_min(sd)) - 1)
-                    .cast("long")
-                    .alias(f"code{s}")
-                )
-            return plan_barrier(based.select(F.col(id_col), "cell", *code_cols))
-        # non-renderable centroids (non-finite values): Column fallback
-        own = F.element_at(
-            mat_lit(centroids), F.array_position(cd, F.array_min(cd)).cast("int")
         )
-        enc_v = F.zip_with("v", own, lambda x, y: x - y)
+        cell_col, src = F.col("cell"), "_rv"
     code_cols = []
     for s in range(m):
-        sd = (
-            _dists(F.slice(enc_v, s * sub + 1, sub), pq_codebooks[s])
-            if residual
-            else _dists(f"slice(v, {s * sub + 1}, {sub})", pq_codebooks[s])
-        )
+        sd = sq_dists_expr(f"slice({src}, {s * sub + 1}, {sub})", pq_codebooks[s])
         code_cols.append(
             (F.array_position(sd, F.array_min(sd)) - 1).cast("long").alias(f"code{s}")
         )
@@ -234,21 +209,9 @@ def pq_reconstruction_report(
         ))
         src = "v"
         if residual:
-            rv = _residual_sql(centroids)
-            if rv is not None:
-                staged = plan_barrier(
-                    staged.select("cell", F.expr(rv).alias("_rv"))
-                )
-            else:  # Column fallback (non-finite centroid values)
-                own = F.element_at(
-                    mat_lit(centroids), (F.col("cell") + 1).cast("int")
-                )
-                staged = plan_barrier(
-                    staged.select(
-                        "cell",
-                        F.zip_with("v", own, lambda x, y: x - y).alias("_rv"),
-                    )
-                )
+            staged = plan_barrier(
+                staged.select("cell", F.expr(_residual_sql(centroids)).alias("_rv"))
+            )
             src = "_rv"
         err = None
         for s in range(m):

@@ -12,32 +12,28 @@ _DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
 def _double_sql(x: float) -> str:
     # repr() is the shortest round-trip form; Spark's parser reads it
     # back to the bit-identical double. 'D' marks a DOUBLE literal
-    # (a bare '1.5' parses as DECIMAL(2,1) in Spark SQL).
-    return repr(float(x)) + "D"
+    # (a bare '1.5' parses as DECIMAL(2,1) in Spark SQL). SQL has no
+    # nan/inf literal, so those parse Spark's special-value strings;
+    # the coalesce keeps the element NOT NULL (a bare CAST is nullable,
+    # which would widen the array type to containsNull=true).
+    x = float(x)
+    if math.isfinite(x):
+        return repr(x) + "D"
+    name = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
+    return f"coalesce(CAST('{name}' AS DOUBLE), 0.0D)"
 
 
-def vec_sql(values) -> str | None:
-    """``array<double>`` literal as SQL TEXT, or None when the values
-    can't be rendered (empty, or non-finite — SQL has no nan/inf
-    double literals)."""
-    vals = [float(x) for x in values]
-    if not vals or not all(map(math.isfinite, vals)):
-        return None
-    return "array(" + ",".join(map(_double_sql, vals)) + ")"
+def vec_sql(values) -> str:
+    """``array<double>`` literal as SQL TEXT — bit- and type-identical
+    to ``F.lit(list)`` for every double, NaN/±Inf/-0.0 included; an
+    empty input renders ``array()`` (F.lit's ``array<null>``)."""
+    return "array(" + ",".join(map(_double_sql, values)) + ")"
 
 
-def mat_sql(rows) -> str | None:
-    """``array<array<double>>`` literal as SQL TEXT, or None when not
-    renderable (empty matrix / empty or non-finite rows)."""
-    parts = []
-    for r in rows:
-        s = vec_sql(r)
-        if s is None:
-            return None
-        parts.append(s)
-    if not parts:
-        return None
-    return "array(" + ",".join(parts) + ")"
+def mat_sql(rows) -> str:
+    """``array<array<double>>`` literal as SQL TEXT (rows rendered by
+    :func:`vec_sql`; same identity with ``F.lit``)."""
+    return "array(" + ",".join(map(vec_sql, rows)) + ")"
 
 
 def plan_barrier(df: DataFrame) -> DataFrame:
@@ -188,16 +184,16 @@ def longs_lit(values) -> Column:
     of :func:`vec_lit` (minhash permutation indices, simhash bit
     masks). LONG_MIN needs the subtraction form: the SQL lexer reads
     the positive magnitude first, which overflows before unary minus
-    applies."""
+    applies. Values outside int64 raise ``ValueError``."""
     from pyspark.sql import functions as F
 
-    vals = [int(x) for x in values]
-    if not vals or any(not (-(1 << 63) <= v < (1 << 63)) for v in vals):
-        return F.array(*[F.lit(v).cast("long") for v in vals])
-    parts = [
-        "(-9223372036854775807L - 1L)" if v == -(1 << 63) else f"{v}L"
-        for v in vals
-    ]
+    parts = []
+    for v in map(int, values):
+        if not -(1 << 63) <= v < (1 << 63):
+            raise ValueError(f"longs_lit: {v} is outside the int64 range")
+        parts.append(
+            "(-9223372036854775807L - 1L)" if v == -(1 << 63) else f"{v}L"
+        )
     return F.expr("array(" + ",".join(parts) + ")")
 
 
@@ -211,32 +207,21 @@ def vec_lit(values) -> Column:
     eigvecs) that made *Python-side plan construction* the dominant
     cost of warm ANN queries — measured 3.4 s of the 5.5 s
     ``similarity_topk_ivf_pq`` wall at sf0.1, 2.6 s of it inside
-    ``F.lit``. Emitting the whole literal as one SQL string is a
-    single round-trip and parses to the bit-identical Catalyst
-    ``Literal`` (test-pinned). Falls back to ``F.lit`` for empty or
-    non-finite input."""
+    ``F.lit``. Emitting the whole literal as one SQL string
+    (:func:`vec_sql`) is a single round-trip and parses to the
+    bit-identical Catalyst ``Literal`` for every input (test-pinned)."""
     from pyspark.sql import functions as F
 
-    vals = [float(x) for x in values]  # materialize first: a one-shot
-    # iterator would be exhausted by vec_sql before the fallback reads it
-    s = vec_sql(vals)
-    if s is None:
-        return F.lit(vals)
-    return F.expr(s)
+    return F.expr(vec_sql(values))
 
 
 def mat_lit(rows) -> Column:
     """``array<array<double>>`` literal in ONE py4j call — the
     codebook/centroid-matrix form of :func:`vec_lit` (same rationale,
-    same bit-identical guarantee, same non-finite fallback)."""
+    same bit-identical guarantee)."""
     from pyspark.sql import functions as F
 
-    mat = [[float(x) for x in r] for r in rows]  # materialize first
-    # (same one-shot-iterator hazard as vec_lit)
-    s = mat_sql(mat)
-    if s is None:
-        return F.lit(mat)
-    return F.expr(s)
+    return F.expr(mat_sql(rows))
 
 
 def _max_partition_bytes(df: DataFrame) -> int:

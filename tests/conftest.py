@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -20,71 +21,101 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # They are SKIPPED by default so the default `pytest tests/` run —
 # the driver's gate — completes with a printed summary; set
 # SPARK_GRAFT_SLOW_TESTS=1 to run everything (the builder's local gate
-# before every round commit, recorded in NOTES.md). Names are exact
-# nodeid leaf names so one slow parametrization never skips its whole
-# (e.g. 95-query) parametrized family.
+# before every round commit, recorded in NOTES.md). Entries are
+# ``file::name`` with the exact nodeid leaf name, so one slow
+# parametrization never skips its whole (e.g. 95-query) parametrized
+# family; an entry whose file is collected without it is a usage
+# error (a renamed or deleted test must leave this list too), and a
+# slow test named on the command line (``path::name``) is run.
 # test_reliable_checkpoint_mode_bit_identical stays in the FAST tier
 # on purpose (10 s): it is the committed evidence that checkpoint_dir
 # is durability-only, worth the driver witnessing each round.
 _SLOW_TESTS = {
-    "test_repeated_execution_identical[ann_recall_ivf_pq]",
-    "test_repeated_execution_identical[asof_latest_per_key]",
-    "test_repeated_execution_identical[audio_fingerprint_near_pairs]",
-    "test_repeated_execution_identical[bpe_learned_merges]",
-    "test_repeated_execution_identical[embedding_covariance]",
-    "test_covariance_from_state_dedupes_replayed_batches",
-    "test_ivf_pq_recall_vs_exact",
-    "test_ivf_pq_residual_refinement",
-    "test_ivf_pq_search_from_persisted_codes",
-    "test_residual_pq_string_fast_path_bit_identical",
-    "test_round10_operator_empty_and_degenerate_edges",
-    "test_zorder_ann_recall_vs_exact",
-    "test_example_pretraining_corpus_build",
-    "test_asof_tolerance_matches_bruteforce",
-    "test_capstone_signal_store_invalidated_by_clear_store_cache",
-    "test_capstone_signals_parquet_roundtrip_decisions_equal",
-    "test_cc_fixpoint_identical_across_hop_schedules",
-    "test_durable_store_refingerprints_within_one_process",
-    "test_funnel_first_touch_matches_bruteforce",
-    "test_gap_fill_daily_matches_bruteforce",
-    "test_image_ahash_pairs_equal_bruteforce",
-    "test_image_phash_band_relation_feeds_state_miner",
-    "test_image_phash_same_class_docs_are_near_dups",
-    "test_incremental_curation_equals_batch_capstone",
-    "test_incremental_miners_upsert_semantics",
-    "test_incremental_rollup_equals_direct",
-    "test_kmv_merge_associativity_property",
-    "test_latest_per_key_matches_bruteforce",
-    "test_salted_agg_equals_plain_agg",
-    "test_ivf2_sq8_recall_vs_exact",
-    "test_query_matches_oracle[audio_fingerprint_keeplist]",
-    "test_query_matches_oracle[corpus_curation_decision]",
-    "test_query_matches_oracle[curation_decision_incremental]",
-    "test_query_matches_oracle[dedup_clusters]",
-    "test_query_matches_oracle[semantic_dedup_pairs_two_level]",
-    "test_round7_operator_empty_and_degenerate_edges",
-    "test_example_ann_serving_pipeline",
-    "test_example_curation_decision_pipeline",
-    "test_example_multimodal_dedup_pipeline",
-    "test_example_pipeline_end_to_end",
-    "test_example_substring_dedup_pipeline",
-    "test_training_data_curation_example",
-    "test_stream_stream_attribution_join",
-    "test_streaming_ann_query_stream_matches_batch",
-    "test_streaming_exact_substring_immune_to_replayed_gram_state",
-    "test_streaming_exact_substring_matches_batch",
-    "test_streaming_perceptual_dedup_matches_batch",
+    "test_determinism.py::test_repeated_execution_identical[ann_recall_ivf_pq]",
+    "test_determinism.py::test_repeated_execution_identical[asof_latest_per_key]",
+    "test_determinism.py::test_repeated_execution_identical[audio_fingerprint_near_pairs]",
+    "test_determinism.py::test_repeated_execution_identical[bpe_learned_merges]",
+    "test_determinism.py::test_repeated_execution_identical[embedding_covariance]",
+    "test_embeddings.py::test_covariance_from_state_dedupes_replayed_batches",
+    "test_embeddings.py::test_ivf_pq_recall_vs_exact",
+    "test_embeddings.py::test_ivf_pq_residual_refinement",
+    "test_embeddings.py::test_ivf_pq_search_from_persisted_codes",
+    "test_embeddings.py::test_round10_operator_empty_and_degenerate_edges",
+    "test_embeddings.py::test_zorder_ann_recall_vs_exact",
+    "test_export.py::test_example_pretraining_corpus_build",
+    "test_properties.py::test_asof_tolerance_matches_bruteforce",
+    "test_properties.py::test_capstone_signal_store_invalidated_by_clear_store_cache",
+    "test_properties.py::test_capstone_signals_parquet_roundtrip_decisions_equal",
+    "test_properties.py::test_cc_fixpoint_identical_across_hop_schedules",
+    "test_properties.py::test_durable_store_refingerprints_within_one_process",
+    "test_properties.py::test_funnel_first_touch_matches_bruteforce",
+    "test_properties.py::test_gap_fill_daily_matches_bruteforce",
+    "test_properties.py::test_image_ahash_pairs_equal_bruteforce",
+    "test_properties.py::test_image_phash_band_relation_feeds_state_miner",
+    "test_properties.py::test_image_phash_same_class_docs_are_near_dups",
+    "test_properties.py::test_incremental_curation_equals_batch_capstone",
+    "test_properties.py::test_incremental_miners_upsert_semantics",
+    "test_properties.py::test_incremental_rollup_equals_direct",
+    "test_properties.py::test_kmv_merge_associativity_property",
+    "test_properties.py::test_latest_per_key_matches_bruteforce",
+    "test_properties.py::test_salted_agg_equals_plain_agg",
+    "test_queries_oracle.py::test_ivf2_sq8_recall_vs_exact",
+    "test_queries_oracle.py::test_query_matches_oracle[audio_fingerprint_keeplist]",
+    "test_queries_oracle.py::test_query_matches_oracle[corpus_curation_decision]",
+    "test_queries_oracle.py::test_query_matches_oracle[curation_decision_incremental]",
+    "test_queries_oracle.py::test_query_matches_oracle[dedup_clusters]",
+    "test_queries_oracle.py::test_query_matches_oracle[semantic_dedup_pairs_two_level]",
+    "test_queries_oracle.py::test_round7_operator_empty_and_degenerate_edges",
+    "test_sinks_sources.py::test_example_ann_serving_pipeline",
+    "test_sinks_sources.py::test_example_curation_decision_pipeline",
+    "test_sinks_sources.py::test_example_multimodal_dedup_pipeline",
+    "test_sinks_sources.py::test_example_pipeline_end_to_end",
+    "test_sinks_sources.py::test_example_substring_dedup_pipeline",
+    "test_sinks_sources.py::test_training_data_curation_example",
+    "test_streaming.py::test_stream_stream_attribution_join",
+    "test_streaming.py::test_streaming_ann_query_stream_matches_batch",
+    "test_streaming.py::test_streaming_exact_substring_immune_to_replayed_gram_state",
+    "test_streaming.py::test_streaming_exact_substring_matches_batch",
+    "test_streaming.py::test_streaming_perceptual_dedup_matches_batch",
 }
 
 
+def _named_on_command_line(config, item) -> bool:
+    """True iff a ``path::name`` command-line argument selects ``item``
+    (the test itself, or its whole parametrized family)."""
+    rest = item.nodeid.split("::", 1)[1]
+    for arg in config.args:
+        path, sep, name = arg.partition("::")
+        if (
+            sep
+            and (config.invocation_params.dir / path).resolve() == item.path.resolve()
+            and (rest == name or rest.startswith((name + "[", name + "::")))
+        ):
+            return True
+    return False
+
+
+@pytest.hookimpl(tryfirst=True)  # see every collected item, before -k/-m
 def pytest_collection_modifyitems(config, items):
+    by_key = {f"{item.path.name}::{item.name}": item for item in items}
+    # a file named with ``::`` (or filtered by --lf) is only partly
+    # collected, so its missing entries prove nothing
+    partial = {Path(a.partition("::")[0]).name for a in config.args if "::" in a}
+    whole = {item.path.name for item in items} - partial
+    stale = sorted(
+        e for e in _SLOW_TESTS if e.split("::", 1)[0] in whole and e not in by_key
+    )
+    if stale and not config.getoption("lf", False):
+        raise pytest.UsageError(
+            f"tests/conftest.py _SLOW_TESTS names uncollected tests: {stale}"
+        )
     if os.environ.get("SPARK_GRAFT_SLOW_TESTS") == "1":
         return
     skip = pytest.mark.skip(
         reason="slow tier (driver test window); SPARK_GRAFT_SLOW_TESTS=1 runs it"
     )
-    for item in items:
-        if item.name in _SLOW_TESTS:
+    for key, item in by_key.items():
+        if key in _SLOW_TESTS and not _named_on_command_line(config, item):
             item.add_marker(skip)
 
 

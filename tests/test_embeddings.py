@@ -587,55 +587,48 @@ def test_ann_recall_report_identity_and_bounds(spark, sf_dir):
     assert sorted(map(tuple, rep2)) == sorted(map(tuple, rep))
 
 
-def test_residual_pq_string_fast_path_bit_identical(spark, sf_dir, monkeypatch):
-    """The round-14 residual fast path (cell/residual/codes staged as
-    F.expr strings behind plan barriers) must be BIT-identical to the
-    Column-HOF fallback it replaces — toggled the ab_literal_fastpath
-    way, by refusing SQL rendering in similarity's namespace only, so
-    exactly the residual staging flips while everything else stays
-    fixed. Covers both the encode relation (integer codes: equality IS
-    bit-identity) and the residual search output."""
+def test_residual_pq_inert_infinite_centroid_row(spark):
+    """The literal renderer is total, so a non-finite centroid matrix
+    goes down the same SQL-text residual path as a finite one (it used
+    to take a separate Column fallback). A +inf centroid row is at
+    infinite distance from every vector, so it can never win an argmin
+    or a probe slot: the residual encode, search and reconstruction
+    report must equal the same calls without that row."""
+    import math
+    import random
+
     from etl_fuel_priceguide_ec2_spark.operators import clustering, similarity
-    from etl_fuel_priceguide_ec2_spark.sources.catalog import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = clustering.fit_centroids(emb, "vec_id", "embedding", k=4, iters=1)
+    rng = random.Random(11)
+    centers = [[rng.uniform(-3, 3) for _ in range(8)] for _ in range(3)]
+    rows = [
+        (i, [c + rng.gauss(0, 0.3) for c in centers[i % 3]]) for i in range(48)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    cents = clustering.fit_centroids(emb, "vec_id", "embedding", k=3, iters=1)
     books = clustering.fit_pq_codebooks(
-        emb, "vec_id", "embedding", m=8, ks=8, iters=1, residuals_of=cents
+        emb, "vec_id", "embedding", m=4, ks=4, iters=1, residuals_of=cents
     )
-    queries = emb.filter(F.col("vec_id") < 5)
+    with_inf = cents + [[math.inf] * 8]
+    queries = emb.filter(F.col("vec_id") < 4)
+    newer = emb.filter(F.col("vec_id") >= 12)
 
-    def run():
-        enc = sorted(
-            map(
-                tuple,
-                similarity.pq_encode(
-                    emb, "vec_id", "embedding", cents, books, residual=True
-                ).collect(),
-            )
+    def run(cs):
+        enc = similarity.pq_encode(
+            emb, "vec_id", "embedding", cs, books, residual=True
         )
-        top = sorted(
-            map(
-                tuple,
-                similarity.topk_ivf_pq(
-                    emb, queries, "vec_id", "embedding",
-                    k=3, nprobe=2, m=8, ks=8, rerank_m=20,
-                    centroids=cents, pq_codebooks=books, residual=True,
-                ).collect(),
-            )
+        top = similarity.topk_ivf_pq(
+            emb, queries, "vec_id", "embedding", k=3, nprobe=2, m=4, ks=4,
+            centroids=cs, pq_codebooks=books, residual=True,
+        )  # pure ADC: the ranking reads the residual tables directly
+        rep = similarity.pq_reconstruction_report(
+            emb, newer, "vec_id", "embedding", cs, books, residual=True
         )
-        return enc, top
+        return [sorted(map(tuple, d.collect())) for d in (enc, top, rep)]
 
-    enc_fast, top_fast = run()
-    assert similarity._residual_sql(cents) is not None  # fast path was live
-    # the fit/encode side lives in similarity_index after the r15 split;
-    # patch the module whose global _residual_sql actually reads
-    from etl_fuel_priceguide_ec2_spark.operators import similarity_index
-    monkeypatch.setattr(similarity_index, "mat_sql", lambda rows: None)
-    assert similarity._residual_sql(cents) is None  # fallback now forced
-    enc_slow, top_slow = run()
-    assert enc_fast == enc_slow and len(enc_fast) > 0
-    assert top_fast == top_slow and len(top_fast) > 0
+    got, want = run(with_inf), run(cents)
+    assert got == want
+    assert all(want)
 
 
 def test_ivf_pq_residual_refinement(spark, sf_dir):

@@ -2278,10 +2278,13 @@ def test_image_phash_band_relation_feeds_state_miner(spark):
 
 def test_sql_literal_helpers_bit_identical_to_f_lit(spark):
     """vec_lit/mat_lit (one-py4j-call F.expr literals) and the
-    sq_dists_expr string fast path must be BIT-identical to the
+    sq_dists_expr SQL-text fold must be BIT-identical to the
     element-by-element F.lit / Python-lambda HOF constructions they
     replace — the ANN/codebook driver-state contract (a single ULP of
-    drift would break every oracle that replays a fit)."""
+    drift would break every oracle that replays a fit). The renderer
+    is total: NaN, +-Inf, -0.0 and empty inputs match F.lit in bits
+    AND dataType (containsNull included), so no fallback exists."""
+    import math
     import struct
 
     from pyspark.sql import functions as F
@@ -2311,44 +2314,61 @@ def test_sql_literal_helpers_bit_identical_to_f_lit(spark):
     assert df.schema["v_new"].dataType == df.schema["v_old"].dataType
     assert df.schema["m_new"].dataType == df.schema["m_old"].dataType
 
-    # non-finite fallback: still correct (plain F.lit path) — and fed
-    # from a ONE-SHOT iterator, which the helper must materialize
-    # before probing renderability (an exhausted generator silently
-    # became an empty literal pre-fix; code-review)
-    import math
+    # non-finite, signed-zero and empty inputs — vec_lit fed from a
+    # ONE-SHOT iterator (rendering must read it exactly once)
+    nf = [1.0, math.nan, math.inf, -math.inf, -0.0]
+    nf_mat = [nf, [2.0, -0.0], []]
+    edf = spark.range(1).select(
+        vec_lit(x for x in nf).alias("v_new"),
+        F.lit(nf).alias("v_old"),
+        vec_lit([]).alias("e_new"),
+        F.lit([]).alias("e_old"),
+        mat_lit(nf_mat).alias("m_new"),
+        F.lit(nf_mat).alias("m_old"),
+        mat_lit([]).alias("me_new"),
+        F.lit([]).alias("me_old"),
+    )
+    r = edf.first()
+    assert bits(r["v_new"]) == bits(r["v_old"])
+    assert [bits(x) for x in r["m_new"]] == [bits(x) for x in r["m_old"]]
+    assert list(r["e_new"]) == list(r["e_old"]) == []
+    assert list(r["me_new"]) == list(r["me_old"]) == []
+    for new, old in [("v", "v"), ("e", "e"), ("m", "m"), ("me", "me")]:
+        assert (
+            edf.schema[f"{new}_new"].dataType == edf.schema[f"{old}_old"].dataType
+        )
 
-    nf = vec_lit(x for x in [1.0, math.inf])
-    got = spark.range(1).select(nf.alias("x")).first()["x"]
-    assert got[0] == 1.0 and math.isinf(got[1])
-    mg = mat_lit([x] for x in [2.0, math.nan])
-    got = spark.range(1).select(mg.alias("x")).first()["x"]
-    assert got[0][0] == 2.0 and math.isnan(got[1][0])
+    # the lambda-HOF fold sq_dists_expr's SQL text replaces, built
+    # over an element-by-element F.lit matrix — the reference form
+    def hof_dists(vcol, rows):
+        return F.transform(
+            F.lit([[float(x) for x in r] for r in rows]),
+            lambda c: F.aggregate(
+                F.zip_with(vcol, c, lambda x, y: (x - y) * (x - y)),
+                F.lit(0.0),
+                lambda acc, d: acc + d,
+            ),
+        )
 
-    # sq_dists fast path (string vcol + raw matrix) vs HOF Column path
     vdf = spark.createDataFrame(
         [(1, [0.5, -0.25, 1e-9, 3.75]), (2, [-0.0, 2.0, -3.5, 0.125])],
         "id bigint, v array<double>",
     )
+    inf_mat = [[math.inf, 0.0], [1.0, -math.inf]]
     two = vdf.select(
         sq_dists_expr("v", mat).alias("fast"),
-        sq_dists_expr(F.col("v"), mat_lit(mat)).alias("hof"),
+        hof_dists(F.col("v"), mat).alias("hof"),
         sq_dists_expr("slice(v, 2, 2)", [[1.0, 2.0]]).alias("fast_slice"),
-        sq_dists_expr(F.slice("v", 2, 2), mat_lit([[1.0, 2.0]])).alias(
-            "hof_slice"
-        ),
+        hof_dists(F.slice("v", 2, 2), [[1.0, 2.0]]).alias("hof_slice"),
+        sq_dists_expr("slice(v, 2, 2)", inf_mat).alias("fast_inf"),
+        hof_dists(F.slice("v", 2, 2), inf_mat).alias("hof_inf"),
     )
     for row in two.collect():
         assert bits(row["fast"]) == bits(row["hof"])
         assert bits(row["fast_slice"]) == bits(row["hof_slice"])
-
-    # non-renderable matrix + expression-string vcol: the fallback must
-    # PARSE the string (a bare pass-through would quote it as a column
-    # name and fail analysis)
-    nf_mat = [[math.inf, 0.0]]
-    got = vdf.select(
-        sq_dists_expr("slice(v, 2, 2)", nf_mat).alias("d")
-    ).first()["d"]
-    assert math.isinf(got[0])
+        assert bits(row["fast_inf"]) == bits(row["hof_inf"])
+        assert all(map(math.isinf, row["fast_inf"]))
+    assert two.schema["fast"].dataType == two.schema["hof"].dataType
 
     # lambda-capture guard: a vector column literally named `c` (or
     # any reserved-looking name) must NOT be captured by the fold's
@@ -2359,9 +2379,7 @@ def test_sql_literal_helpers_bit_identical_to_f_lit(spark):
     )
     cap = cdf.select(
         sq_dists_expr("c", [[0.0, 0.0, 0.0, 0.0]]).alias("fast"),
-        sq_dists_expr(F.col("c"), mat_lit([[0.0, 0.0, 0.0, 0.0]])).alias(
-            "hof"
-        ),
+        hof_dists(F.col("c"), [[0.0, 0.0, 0.0, 0.0]]).alias("hof"),
     ).first()
     assert cap["fast"] == cap["hof"] == [30.0]
 
@@ -2392,6 +2410,17 @@ def test_sql_literal_helpers_bit_identical_to_f_lit(spark):
     lr = ldf.first()
     assert list(lr["l_new"]) == list(lr["l_old"]) == masks
     assert ldf.schema["l_new"].dataType == ldf.schema["l_old"].dataType
+    edf = spark.range(1).select(
+        longs_lit([]).alias("l_new"), F.array().alias("l_old")
+    )
+    assert edf.schema["l_new"].dataType == edf.schema["l_old"].dataType
+
+    # out-of-int64 input has no bigint literal: fail loudly
+    import pytest
+
+    for bad in ([1 << 63], [-(1 << 63) - 1]):
+        with pytest.raises(ValueError, match="int64"):
+            longs_lit(bad)
 
 
 def test_capstone_signals_parquet_roundtrip_decisions_equal(spark, sf_dir, tmp_path):
@@ -2471,18 +2500,18 @@ def test_capstone_signals_parquet_roundtrip_decisions_equal(spark, sf_dir, tmp_p
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     vals=st.lists(
-        st.floats(allow_nan=False, allow_infinity=False, width=64),
-        min_size=1, max_size=8,
+        st.floats(allow_nan=False, allow_infinity=True, width=64),
+        min_size=0, max_size=8,
     ),
     longs=st.lists(
         st.integers(min_value=-(1 << 63), max_value=(1 << 63) - 1),
-        min_size=1, max_size=8,
+        min_size=0, max_size=8,
     ),
 )
 def test_literal_helpers_roundtrip_arbitrary_values(spark, vals, longs):
-    """Hypothesis sweep over arbitrary finite doubles (subnormals,
-    extreme exponents, -0.0 — whatever the shrinker finds) and
-    full-range longs: the one-parse SQL literals must reproduce
+    """Hypothesis sweep over arbitrary doubles (subnormals, extreme
+    exponents, -0.0, +-Inf, empty lists — whatever the shrinker finds)
+    and full-range longs: the one-parse SQL literals must reproduce
     F.lit's values bit-for-bit. The fixed adversarial set in the main
     pin test documents known corners; this guards the ones nobody
     thought of (repr round-trip + Spark's SQL double parser must agree
@@ -2506,6 +2535,8 @@ def test_literal_helpers_roundtrip_arbitrary_values(spark, vals, longs):
     bits = lambda xs: [struct.pack(">d", x) for x in xs]
     assert bits(r["d_new"]) == bits(r["d_old"])
     assert list(r["l_new"]) == list(r["l_old"]) == longs
+    for c in ("d", "l"):
+        assert df.schema[f"{c}_new"].dataType == df.schema[f"{c}_old"].dataType
 
 
 def test_capstone_signals_rejects_unknown_materialize_mode(spark):
@@ -2662,6 +2693,60 @@ def test_iteration_pin_sets_checkpoint_dir_once(spark, tmp_path):
     assert _checkpoint_dir_matches(cur, ckdir + "/")
     assert not _checkpoint_dir_matches(cur, str(tmp_path / "other"))
     assert not _checkpoint_dir_matches(None, ckdir)
+
+
+def test_exact_substring_spans_rejects_checkpoint_dir_without_cap(
+    spark, tmp_path
+):
+    """checkpoint_dir makes the capped-gram pin reliable; with
+    max_gram_freq=None no pin is taken, so the directory would be
+    silently ignored — the call must fail loudly instead."""
+    import pytest
+
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="max_gram_freq"):
+        dedup.exact_substring_spans(
+            docs, "doc_id", "text", k=2, min_span_tokens=2,
+            max_gram_freq=None, checkpoint_dir=str(tmp_path / "ck"),
+        )
+
+
+def test_exact_substring_spans_incremental_rejects_checkpoint_dir_without_cap(
+    spark, tmp_path
+):
+    """Same rule as the batch span miner: the union-gram pin exists
+    only under a frequency cap."""
+    import pytest
+
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    grams = dedup.positional_gram_state(docs, "doc_id", "text", k=2)
+    with pytest.raises(ValueError, match="max_gram_freq"):
+        dedup.exact_substring_spans_incremental(
+            grams, grams, k=2, min_span_tokens=2,
+            max_gram_freq=None, checkpoint_dir=str(tmp_path / "ck"),
+        )
+
+
+def test_ngram_jaccard_rejects_checkpoint_dir_on_non_prefix_path(
+    spark, tmp_path
+):
+    """The plain inverted-index path takes no pin, so checkpoint_dir
+    there must raise rather than be silently ignored; the prefix path
+    still accepts it."""
+    import pytest
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f")], "doc_id long, text string"
+    )
+    ckdir = str(tmp_path / "ck")
+    with pytest.raises(ValueError, match="prefix"):
+        dedup.ngram_jaccard_pairs(
+            docs, "doc_id", "text", prefix_filter=False, checkpoint_dir=ckdir
+        )
+    got = dedup.ngram_jaccard_pairs(
+        docs, "doc_id", "text", n=2, prefix_filter=True, checkpoint_dir=ckdir
+    ).collect()
+    assert [(r.id_a, r.id_b) for r in got] == [(1, 2)]
 
 
 def test_durable_store_refingerprints_within_one_process(spark, tmp_path):

@@ -26,9 +26,9 @@ from pyspark.sql import functions as F
 from etl_fuel_priceguide_ec2_spark.operators import clustering
 from etl_fuel_priceguide_ec2_spark.operators.clustering import (
     fit_two_level_codebooks,
-    mat_lit,
     sq_dists_expr,
 )
+from etl_fuel_priceguide_ec2_spark.operators.util import mat_lit
 from etl_fuel_priceguide_ec2_spark.session import get_session
 from etl_fuel_priceguide_ec2_spark.sources.catalog import load_table
 
