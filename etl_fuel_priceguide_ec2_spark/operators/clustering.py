@@ -99,12 +99,12 @@ def sq_dists_expr(vec_text: str, mat) -> Column:
     return F.expr(sq_dists_sql(vec_text, mat_sql(mat)))
 
 
-def ranked_probe_cells(dists, cells: int, nprobe: int) -> Column:
-    """The ONE definition of IVF probe-cell ranking (ADVICE r15): given
-    a per-row array of ``cells`` squared distances, return the
-    ``nprobe`` nearest cell ids as ``array<long>``, ranked ascending
-    with ties to the LOWER cell id. Every consumer of the probe set —
-    ``topk_ivf_pq``'s query side, ``cosine_topk_ivf_sq8``,
+def ranked_probe_cells_sql(dists_text: str, cells: int, nprobe: int) -> str:
+    """The ONE definition of IVF probe-cell ranking (ADVICE r15), as SQL
+    TEXT: given ``dists_text``, a per-row array of ``cells`` squared
+    distances, the ``nprobe`` nearest cell ids as ``array<bigint>``,
+    ranked ascending with ties to the LOWER cell id. Every consumer of
+    the probe set — ``topk_ivf_pq``'s SQL search, ``cosine_topk_ivf_sq8``,
     ``cosine_topk_ivf2_sq8``'s per-level probes,
     ``semantic_dedup_pairs_two_level``'s block probes, and the
     serving-layer ``probe_cells`` relation that
@@ -113,15 +113,19 @@ def ranked_probe_cells(dists, cells: int, nprobe: int) -> Column:
     expression, never a re-derivation: if ranking ever diverged (fold
     order, tiebreak, cast), pruning would silently drop cells the
     search actually probes and return wrong results instead of
-    erroring."""
-    ranked = F.array_sort(
-        F.zip_with(
-            dists,
-            F.sequence(F.lit(0), F.lit(cells - 1)),
-            lambda d, i: F.struct(d.alias("d"), i.alias("cid")),
-        )
+    erroring. ``dists_text`` sits outside the ``_rpc_*`` lambdas, so
+    they cannot capture it."""
+    return (
+        f"transform(slice(array_sort(zip_with({dists_text}, "
+        f"sequence(0, {cells - 1}), "
+        "(_rpc_d, _rpc_i) -> struct(_rpc_d AS d, _rpc_i AS cid))), "
+        f"1, {nprobe}), _rpc_s -> CAST(_rpc_s.cid AS BIGINT))"
     )
-    return F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cid"].cast("long"))
+
+
+def ranked_probe_cells(dists_text: str, cells: int, nprobe: int) -> Column:
+    """:func:`ranked_probe_cells_sql` as a Column (one ``F.expr`` parse)."""
+    return F.expr(ranked_probe_cells_sql(dists_text, cells, nprobe))
 
 
 def _fit_sample(base: DataFrame, id_col: str, fit_fraction: float) -> DataFrame:
@@ -679,10 +683,12 @@ def semantic_dedup_pairs_two_level(
     probed = (
         base.withColumn("_d1", d1)
         .withColumn("_resid", resid)
-        .withColumn("_b1", F.explode(ranked_probe_cells(F.col("_d1"), k1, probes)))
+        .withColumn("_b1", F.explode(ranked_probe_cells("_d1", k1, probes)))
         .withColumn(
             "_b2",
-            F.explode(ranked_probe_cells(sq_dists_expr("_resid", c2), k2, probes)),
+            F.explode(ranked_probe_cells(
+                sq_dists_sql("_resid", mat_sql(c2)), k2, probes
+            )),
         )
         .withColumn("block", F.col("_b1") * k2 + F.col("_b2"))
     )

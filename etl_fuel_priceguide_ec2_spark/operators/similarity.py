@@ -24,13 +24,16 @@ from etl_fuel_priceguide_ec2_spark.operators.clustering import (
     # ranked_probe_cells is defined in clustering (the two-level block
     # probes fold it too) and stays importable from this module
     ranked_probe_cells,
+    ranked_probe_cells_sql,
     residual_sql,
     sq_dists_expr,
+    sq_dists_sql,
 )
 from etl_fuel_priceguide_ec2_spark.operators.similarity_index import (  # noqa: F401
     # re-exported: the fit/encode side moved to similarity_index
     # (VERDICT r14 item 7) — callers keep importing via this module
     _pair_sq_dist,
+    _pair_sq_dist_sql,
     _residual_sql,
     _with_norm,
     pq_encode,
@@ -42,6 +45,8 @@ from etl_fuel_priceguide_ec2_spark.operators.util import (
     mat_lit,
     mat_sql,
     plan_barrier,
+    plan_barrier_sql,
+    sql_over_frames,
 )
 
 
@@ -376,7 +381,7 @@ def cosine_topk_ivf_sq8(
     ))
     # queries: nprobe nearest cells + int8 code
     qb = _with_norm(queries, id_col, vec_col)
-    qd = _dists("v", centroids)
+    qd = sq_dists_sql("v", mat_sql(centroids))
     q = qb.select(
         F.col(id_col).alias("query_id"),
         F.explode(ranked_probe_cells(qd, cells, nprobe)).alias("cell"),
@@ -607,6 +612,119 @@ def cosine_topk_ivf2_sq8(
     )
 
 
+def _sql_ident(name: str) -> str:
+    """Backtick-quoted SQL identifier (an inner backtick doubles), so
+    any column name renders as itself."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _ivf_pq_sql(
+    id_col: str,
+    vec_col: str,
+    centroids: list[list[float]],
+    pq_codebooks: list[list[list[float]]],
+    k: int,
+    nprobe: int,
+    rerank_m: int | None,
+    residual: bool,
+) -> str:
+    """The whole IVF-PQ search (:func:`topk_ivf_pq`) as ONE SQL text:
+    a ``util.sql_over_frames`` template over the bound relations
+    ``{codes}``, ``{queries}`` and (rerank only) ``{corpus}``. Pure
+    Python — the centroids and codebooks ride in as literals
+    (``util.mat_sql``), the folds are the shared text builders
+    (``sq_dists_sql``, ``residual_sql``, ``ranked_probe_cells_sql``,
+    ``_pair_sq_dist_sql``) and the staged residual keeps its
+    ``rand(42)`` barrier (``plan_barrier_sql``), so the optimized plan
+    has the operators the DataFrame form built, minus its fan-out
+    shuffles."""
+    m = len(pq_codebooks)
+    sub = len(centroids[0]) // m
+    # braces double too: the text is a str.format template
+    idc, vec = (
+        _sql_ident(c).replace("{", "{{").replace("}", "}}")
+        for c in (id_col, vec_col)
+    )
+    cents = mat_sql(centroids)
+
+    # queries: nprobe nearest cells + one ADC table per subspace (per
+    # probed CELL when residual — the table subtracts that cell's
+    # centroid from the query so it lives in the candidates' frame)
+    qv = (
+        f"SELECT {idc} AS query_id, CAST({vec} AS ARRAY<DOUBLE>) AS v "
+        "FROM {queries}"
+    )
+    probe = ranked_probe_cells_sql(
+        sq_dists_sql("v", cents), len(centroids), nprobe
+    )
+    src = "_rv" if residual else "v"
+    tables = ", ".join(
+        sq_dists_sql(
+            f"slice({src}, {s * sub + 1}, {sub})", mat_sql(pq_codebooks[s])
+        )
+        + f" AS adc{s}"
+        for s in range(m)
+    )
+    if residual:
+        # staged residual (same discipline as the residual pq_encode):
+        # project the residual ONCE per (query, probed cell) row behind
+        # the barrier, then build the m table folds over its slices
+        rv = residual_sql("v", "CAST(cell + 1 AS INT)", cents)
+        probed = plan_barrier_sql(
+            f"SELECT query_id, cell, {rv} AS _rv FROM "
+            f"(SELECT query_id, explode({probe}) AS cell, v FROM ({qv}))",
+            ["query_id", "cell", "_rv"],
+        )
+        q = f"SELECT query_id, cell, {tables} FROM ({probed})"
+    else:
+        q = f"SELECT query_id, explode({probe}) AS cell, {tables} FROM ({qv})"
+
+    # 9dp-quantized DECIMAL term sum: exact and order-free, so the ADC
+    # ranking is replayable by an oracle that groups the terms instead
+    # of chaining them (unit-scale distances sit safely inside the
+    # toString-vs-scaled-double rounding envelope)
+    adc = " + ".join(
+        f"CAST(round(element_at(q.adc{s}, CAST(c.code{s} + 1 AS INT)), 9) "
+        "AS DECIMAL(18,9))"
+        for s in range(m)
+    )
+    code_cols = ", ".join(f"code{s}" for s in range(m))
+    scored = (
+        f"SELECT /*+ BROADCAST(q) */ c.neighbor_id, q.query_id, {adc} AS _adc "
+        f"FROM (SELECT {idc} AS neighbor_id, cell, {code_cols} FROM {{codes}}) c "
+        f"JOIN ({q}) q ON c.cell = q.cell WHERE q.query_id != c.neighbor_id"
+    )
+
+    def ranked(rel: str, score: str, name: str) -> str:
+        return (
+            f"SELECT *, row_number() OVER (PARTITION BY query_id "
+            f"ORDER BY {score} ASC, neighbor_id ASC) AS {name} FROM ({rel})"
+        )
+
+    if rerank_m is None:
+        return (
+            "SELECT query_id, neighbor_id, rank, CAST(_adc AS DOUBLE) AS "
+            f"approx_sq_dist FROM ({ranked(scored, '_adc', 'rank')}) "
+            f"WHERE rank <= {int(k)}"
+        )
+    cand = (
+        "SELECT query_id, neighbor_id FROM "
+        f"({ranked(scored, '_adc', '_crank')}) WHERE _crank <= {int(rerank_m)}"
+    )
+    rescored = (
+        "SELECT /*+ BROADCAST(qf) */ cand.query_id, cand.neighbor_id, "
+        f"{_pair_sq_dist_sql('cf.cv', 'qf.qv')} AS _d FROM ({cand}) cand "
+        f"JOIN (SELECT {idc} AS neighbor_id, CAST({vec} AS ARRAY<DOUBLE>) AS cv "
+        "FROM {corpus}) cf ON cand.neighbor_id = cf.neighbor_id "
+        f"JOIN (SELECT {idc} AS query_id, CAST({vec} AS ARRAY<DOUBLE>) AS qv "
+        "FROM {queries}) qf ON cand.query_id = qf.query_id"
+    )
+    return (
+        "SELECT query_id, neighbor_id, rank, round(_d, 6) AS sq_dist "
+        f"FROM ({ranked(rescored, '_d', 'rank')}) WHERE rank <= {int(k)}"
+    )
+
+
 def topk_ivf_pq(
     corpus: DataFrame,
     queries: DataFrame,
@@ -654,17 +772,22 @@ def topk_ivf_pq(
     (query_id, neighbor_id, rank, sq_dist) reranked, or
     (query_id, neighbor_id, rank, approx_sq_dist) pure-ADC.
 
-    Classical refinement not taken (documented): FAISS's IVF,PQ
-    encodes RESIDUALS (v - coarse centroid) for tighter codebooks;
-    this rung quantizes raw vectors so the PQ codebooks are
-    independent of the coarse layer and replayable with the same
-    Lloyd's SQL fragment per subspace.
+    One request is ONE SQL statement (:func:`_ivf_pq_sql`): the search
+    is rendered as text and analyzed once (``util.sql_over_frames``)
+    with ``codes``, ``queries`` and ``corpus`` bound as DataFrame
+    parameters — no per-operation eager analysis and no fan-out
+    repartition of the (small) query batch; docs/SCALE.md §7 has the
+    request anatomy.
 
     100 TB shape: fits touch the corpus iters times (bounded driver
     state: cells*dim + m*ks*(dim/m) doubles); the probe reads
-    ~nprobe/cells of a corpus stored as 8-byte codes; the rerank reads
-    rerank_m full vectors per query; top-k is the W1 window over
-    (query, candidate) score triples.
+    ~nprobe/cells of a corpus stored as 8-byte codes; top-k is the W1
+    window over (query, candidate) score triples. The rerank is NOT
+    yet per-query: it joins the rerank_m candidate ids against the
+    WHOLE full-vector corpus relation (AQE broadcasts it when small),
+    so its cost grows with the corpus. A cell-partitioned vector store
+    that the rerank could prune like the code store is open
+    (docs/SCALE.md, "Streaming ANN").
 
     ``codes``: a persisted ``pq_encode`` relation (read back off
     parquet) — searches consume the stored codes directly and skip the
@@ -678,9 +801,22 @@ def topk_ivf_pq(
     at the cost of per-cell ADC tables; the registered query uses the
     raw form (independent codebooks, simpler oracle), with the
     residual form's reconstruction-error win pinned by test. Pass
-    codebooks fitted with ``fit_pq_codebooks(residuals_of=...)``."""
+    codebooks fitted with ``fit_pq_codebooks(residuals_of=...)``.
+
+    ``id_col``/``vec_col`` must not name one of the search's internal
+    columns (v, cell, _rv, query_id, neighbor_id, adc0.., code0..,
+    _adc, _d; case-insensitive) — ``ValueError`` up front."""
     from etl_fuel_priceguide_ec2_spark.operators import clustering
 
+    reserved = {"v", "cell", "_rv", "query_id", "neighbor_id", "_adc", "_d"}
+    reserved |= {f"{p}{s}" for p in ("adc", "code") for s in range(m)}
+    for col in (id_col, vec_col):
+        if col.lower() in reserved:
+            raise ValueError(
+                f"topk_ivf_pq: column {col!r} collides with an internal "
+                "column name (v/cell/_rv/query_id/neighbor_id/_adc/_d/"
+                f"adc0..adc{m - 1}/code0..code{m - 1})"
+            )
     if centroids is None:
         centroids = clustering.fit_centroids(
             corpus, id_col, vec_col, k=cells, iters=iters
@@ -713,124 +849,21 @@ def topk_ivf_pq(
             )
             for s in range(m)
         ]
-    cells = len(centroids)
-    _dists = sq_dists_expr
-
     # corpus: primary coarse cell + m sub-codes — the persisted-state
     # relation (pq_encode). Pass ``codes=`` (read back off parquet) to
     # search straight from the stored column without re-encoding;
     # equality with the end-to-end path is test-pinned.
-    enc = (
-        codes
-        if codes is not None
-        else pq_encode(
+    if codes is None:
+        codes = pq_encode(
             corpus, id_col, vec_col, centroids, pq_codebooks, residual=residual
         )
+    text = _ivf_pq_sql(
+        id_col, vec_col, centroids, pq_codebooks, k, nprobe, rerank_m, residual
     )
-    c = enc.withColumnRenamed(id_col, "neighbor_id")
-
-    # queries: nprobe nearest cells + one ADC table per subspace (per
-    # probed CELL when residual — the table subtracts that cell's
-    # centroid from the query so it lives in the candidates' frame)
-    qb = _with_norm(queries, id_col, vec_col)
-    qd = _dists("v", centroids)
-    probe_cells = F.explode(ranked_probe_cells(qd, cells, nprobe)).alias("cell")
-    if residual:
-        # per-cell tables are genuinely needed: each probed cell's
-        # table subtracts THAT cell's centroid from the query
-        probed = qb.select(
-            F.col(id_col).alias("query_id"), probe_cells, F.col("v")
-        )
-        # staged residual (same discipline as the residual pq_encode):
-        # project the residual ONCE per (query, probed cell) row behind
-        # a barrier, then build the m table folds over slices of the
-        # projected column
-        probed = plan_barrier(
-            probed.select(
-                "query_id", "cell", F.expr(_residual_sql(centroids)).alias("_rv")
-            )
-        )
-        q = probed.select(
-            "query_id",
-            "cell",
-            *[
-                _dists(
-                    f"slice(_rv, {s * sub + 1}, {sub})", pq_codebooks[s]
-                ).alias(f"adc{s}")
-                for s in range(m)
-            ],
-        )
-    else:
-        # raw vectors: the tables are cell-independent, so compute all
-        # m HOF folds ONCE per query alongside the explode instead of
-        # once per (query, probed cell) row (code-review r13: the
-        # two-select residual restructure had made every probe row pay
-        # nprobe x the table build and broadcast payload)
-        q = qb.select(
-            F.col(id_col).alias("query_id"),
-            probe_cells,
-            *[
-                _dists(f"slice(v, {s * sub + 1}, {sub})", pq_codebooks[s]).alias(
-                    f"adc{s}"
-                )
-                for s in range(m)
-            ],
-        )
-    # 9dp-quantized DECIMAL term sum: exact and order-free, so the ADC
-    # ranking is replayable by an oracle that groups the terms instead
-    # of chaining them (unit-scale distances sit safely inside the
-    # toString-vs-scaled-double rounding envelope)
-    approx = None
-    for s in range(m):
-        term = F.round(
-            F.element_at(F.col(f"adc{s}"), (F.col(f"code{s}") + 1).cast("int")), 9
-        ).cast("decimal(18,9)")
-        approx = term if approx is None else approx + term
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("_adc", approx)
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("_adc").asc(), F.col("neighbor_id").asc()
-    )
-    if rerank_m is None:
-        return (
-            scored.withColumn("rank", F.row_number().over(w_adc))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id",
-                "neighbor_id",
-                "rank",
-                F.col("_adc").cast("double").alias("approx_sq_dist"),
-            )
-        )
-    cand = (
-        scored.withColumn("_crank", F.row_number().over(w_adc))
-        .filter(F.col("_crank") <= rerank_m)
-        .select("query_id", "neighbor_id")
-    )
-    cfull = _with_norm(corpus, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("v").alias("cv")
-    )
-    qfull = _with_norm(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv")
-    )
-    rescored = (
-        cand.join(cfull, "neighbor_id")
-        .join(F.broadcast(qfull), "query_id")
-        .withColumn("_d", _pair_sq_dist("cv", "qv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_d").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "rank", F.round("_d", 6).alias("sq_dist")
-        )
-    )
+    frames = {"codes": codes, "queries": queries}
+    if rerank_m is not None:
+        frames["corpus"] = corpus
+    return sql_over_frames(queries.sparkSession, text, **frames)
 
 
 def exact_sq_topk(
@@ -951,13 +984,14 @@ def probe_cells(
     ``ranked_probe_cells`` expression the rungs fold (one shared
     definition, ADVICE r15 — not a parallel re-derivation), so pruning
     a store to these cells can never change a search result (pinned by
-    test)."""
-    cells = len(centroids)
-    qb = _with_norm(queries, id_col, vec_col)
-    qd = sq_dists_expr("v", centroids)
-    return qb.select(
+    test). The vector is projected straight off the batch, with no
+    ``fan_out`` repartition: a query batch is a handful of rows, and
+    the pruning path runs this once per micro-batch."""
+    v = f"CAST({_sql_ident(vec_col)} AS ARRAY<DOUBLE>)"
+    qd = sq_dists_sql(v, mat_sql(centroids))
+    return queries.select(
         F.col(id_col).alias("query_id"),
-        F.explode(ranked_probe_cells(qd, cells, nprobe)).alias("cell"),
+        F.explode(ranked_probe_cells(qd, len(centroids), nprobe)).alias("cell"),
     )
 
 

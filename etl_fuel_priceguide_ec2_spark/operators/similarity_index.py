@@ -40,17 +40,23 @@ def _residual_sql(centroids) -> str:
     return residual_sql("v", "CAST(cell + 1 AS INT)", mat_sql(centroids))
 
 
-def _pair_sq_dist(cv: str, qv: str):
-    """Full-precision squared-L2 between two projected vector columns
-    — the ONE definition the exact brute-force ground truth AND the
-    PQ rerank both fold (code-review r14: two verbatim copies could
+def _pair_sq_dist_sql(cv: str, qv: str) -> str:
+    """Full-precision squared-L2 between two vector expressions, as SQL
+    TEXT — the ONE definition the exact brute-force ground truth AND
+    the PQ rerank both fold (code-review r14: two verbatim copies could
     silently diverge on a rounding/fold-order change, desynchronizing
-    the recall harness from the rerank it measures)."""
-    return F.aggregate(
-        F.zip_with(cv, qv, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
+    the recall harness from the rerank it measures). ``cv``/``qv`` sit
+    outside the ``_psd_*`` lambdas, so they cannot be captured."""
+    return (
+        f"aggregate(zip_with({cv}, {qv}, "
+        "(_psd_x, _psd_y) -> (_psd_x - _psd_y) * (_psd_x - _psd_y)), "
+        "0.0D, (_psd_a, _psd_t) -> _psd_a + _psd_t)"
     )
+
+
+def _pair_sq_dist(cv: str, qv: str):
+    """:func:`_pair_sq_dist_sql` as a Column (one ``F.expr`` parse)."""
+    return F.expr(_pair_sq_dist_sql(cv, qv))
 
 
 def _with_norm(df: DataFrame, id_col: str, vec_col: str, extra: list[str] | None = None) -> DataFrame:

@@ -3,8 +3,9 @@
 from __future__ import annotations
 
 import math
+import uuid
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 
 _DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
 
@@ -74,6 +75,44 @@ def plan_barrier(df: DataFrame) -> DataFrame:
         df.withColumn("_plan_barrier", F.rand(42))
         .filter(F.col("_plan_barrier") >= -1)
         .drop("_plan_barrier")
+    )
+
+
+def sql_over_frames(
+    session: SparkSession, template: str, **frames: DataFrame
+) -> DataFrame:
+    """Analyze the SQL ``template`` ONCE in ``session``, each
+    ``{name}`` placeholder bound to the DataFrame ``frames[name]``
+    (``str.format`` rules: literal braces in the text are doubled).
+
+    Like ``spark.sql(template, name=df)``, except the frames are
+    registered as GLOBAL temp views: a streaming ``foreachBatch``
+    micro-batch lives in a cloned session, and a plain temp view of a
+    frame from one session is invisible to another. The views exist
+    only for the parse; ``spark.sql`` analyzes eagerly, so the result
+    keeps the frames' plans after they are dropped."""
+    db = session.conf.get("spark.sql.globalTempDatabase", "global_temp")
+    names = {key: f"_sql_over_{uuid.uuid4().hex}" for key in frames}
+    try:
+        for key, df in frames.items():
+            df.createOrReplaceGlobalTempView(names[key])
+        return session.sql(
+            template.format(**{key: f"{db}.{n}" for key, n in names.items()})
+        )
+    finally:
+        for n in names.values():
+            session.catalog.dropGlobalTempView(n)
+
+
+def plan_barrier_sql(relation: str, names) -> str:
+    """:func:`plan_barrier` as SQL TEXT over the query ``relation``
+    whose output columns are ``names`` — the same marker, vacuous
+    filter and drop, for operators that render a whole plan as one
+    statement."""
+    cols = ", ".join(names)
+    return (
+        f"SELECT {cols} FROM (SELECT *, rand(42) AS _plan_barrier "
+        f"FROM ({relation})) WHERE _plan_barrier >= -1"
     )
 
 

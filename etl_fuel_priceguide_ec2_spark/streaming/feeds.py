@@ -790,11 +790,14 @@ def ann_query_stream(
     coarse-cell count) and pushes a static IN filter into the store
     scan, so the read prunes to ~nprobe/cells at the PARTITION level
     (plan-pinned — the scan never depends on runtime DPP). The trigger
-    then broadcasts only the micro-batch's ADC tables and reranks
-    rerank_m full vectors per query — steady-state serving cost is
-    per-query, not per-corpus. Pruning cannot change results: the
-    rung's candidate join is an equi-join on cell (equality pinned by
-    the union==batch test)."""
+    then broadcasts only the micro-batch's ADC tables. The rerank is
+    NOT per-query yet: it joins the rerank_m candidates per query
+    against the WHOLE full-vector ``corpus`` relation (AQE broadcasts
+    it when small), so each trigger pays a corpus-sized read; a
+    cell-partitioned vector store the rerank could prune like the code
+    store is open (docs/SCALE.md, "Streaming ANN"). Pruning cannot
+    change results: the rung's candidate join is an equi-join on cell
+    (equality pinned by the union==batch test)."""
     from etl_fuel_priceguide_ec2_spark.operators import similarity
 
     def _one(batch_df: DataFrame, batch_id: int) -> None:

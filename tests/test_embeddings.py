@@ -631,6 +631,61 @@ def test_residual_pq_inert_infinite_centroid_row(spark):
     assert all(want)
 
 
+def test_ivf_pq_guards_internal_names_and_quotes_identifiers(spark):
+    """topk_ivf_pq renders its search as one SQL text, so user column
+    names reach the parser: a name that collides with an internal
+    column raises ValueError up front (pq_encode's guard, mirrored),
+    and a name that needs quoting — backtick, braces, space, hyphen —
+    returns rows bit-equal to a plainly named copy, for the residual
+    rerank form and the raw pure-ADC form alike."""
+    import random
+
+    from etl_fuel_priceguide_ec2_spark.operators import clustering, similarity
+
+    rng = random.Random(5)
+    rows = [(i, [rng.gauss(i % 3, 0.4) for _ in range(8)]) for i in range(60)]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    cents = clustering.fit_centroids(emb, "vec_id", "embedding", k=3, iters=1)
+
+    for bad in ("v", "Cell", "_rv", "query_id", "neighbor_id", "adc0",
+                "code3", "_adc", "_d"):
+        for id_col, vec_col in ((bad, "embedding"), ("vec_id", bad)):
+            with pytest.raises(ValueError, match="collides"):
+                similarity.topk_ivf_pq(
+                    emb, emb, id_col, vec_col, m=4, ks=4, centroids=cents
+                )
+
+    odd_id, odd_vec = "doc `id` {0}", "emb-vec {x}}"
+    odd = emb.select(
+        F.col("vec_id").alias(odd_id), F.col("embedding").alias(odd_vec)
+    )
+    for residual, rerank_m in ((True, 12), (False, None)):
+        books = clustering.fit_pq_codebooks(
+            emb, "vec_id", "embedding", m=4, ks=4, iters=1,
+            residuals_of=cents if residual else None,
+        )
+        codes = similarity.pq_encode(
+            emb, "vec_id", "embedding", cents, books, residual=residual
+        )
+
+        def search(corpus, id_col, vec_col, stored):
+            quoted_id = "`" + id_col.replace("`", "``") + "`"
+            return similarity.topk_ivf_pq(
+                corpus, corpus.filter(F.col(quoted_id) < 6),
+                id_col, vec_col, k=4, nprobe=2, m=4, ks=4,
+                rerank_m=rerank_m, centroids=cents, pq_codebooks=books,
+                codes=stored, residual=residual,
+            )
+
+        plain = search(emb, "vec_id", "embedding", codes)
+        quoted = search(
+            odd, odd_id, odd_vec, codes.withColumnRenamed("vec_id", odd_id)
+        )
+        assert quoted.schema == plain.schema
+        want = sorted(map(tuple, plain.collect()))
+        assert sorted(map(tuple, quoted.collect())) == want and len(want) == 24
+
+
 def test_ivf_pq_residual_refinement(spark, sf_dir):
     """The classical IVF,PQ residual form (codes over v - own-cell
     centroid; per-cell query ADC tables): reconstruction error is

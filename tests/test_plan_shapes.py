@@ -995,6 +995,53 @@ def test_ann_codes_store_scan_prunes_to_probed_cells(spark, sf_dir, tmp_path):
     assert got1 == sorted(map(tuple, f1.collect())) and got1
 
 
+def test_ivf_pq_request_plans_one_cut_exchange_and_few_jobs(spark, sf_dir, tmp_path):
+    """One served IVF-PQ request (stored residual codes + rerank, the
+    serving shape) is one SQL statement: no fan-out RoundRobin
+    repartition of the query batch or the corpus, exactly ONE hash
+    exchange (the per-query ADC cut's window), the staged residual
+    `_rv` computed in ONE Project (the barrier holds inside the SQL
+    text), and at most 5 Spark jobs per collect. probe_cells (the
+    store-pruning relation) plans no exchange at all."""
+    import re
+
+    from etl_fuel_priceguide_ec2_spark.operators import clustering, similarity
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = clustering.fit_centroids(emb, "vec_id", "embedding", k=4, iters=1)
+    books = clustering.fit_pq_codebooks(
+        emb, "vec_id", "embedding", m=8, ks=8, iters=1, residuals_of=cents
+    )
+    path = str(tmp_path / "codes_by_cell")
+    similarity.pq_encode(
+        emb, "vec_id", "embedding", cents, books, residual=True
+    ).write.partitionBy("cell").parquet(path)
+    queries = emb.filter(F.col("vec_id") < 3)
+    search = similarity.topk_ivf_pq(
+        emb, queries, "vec_id", "embedding",
+        k=3, nprobe=2, rerank_m=10, m=8, ks=8, centroids=cents,
+        pq_codebooks=books, codes=spark.read.parquet(path), residual=True,
+    )
+    plan = _plan(search)
+    assert "RoundRobinPartitioning" not in plan
+    assert len(re.findall(r"Arguments: hashpartitioning\(", plan)) == 1, plan
+    optimized = search._jdf.queryExecution().optimizedPlan().toString()
+    rv_nodes = [ln for ln in optimized.splitlines() if "_rsd_x" in ln]
+    assert len(rv_nodes) == 1 and "Project [" in rv_nodes[0], rv_nodes
+    probes = similarity.probe_cells(queries, "vec_id", "embedding", cents, 2)
+    assert "Exchange" not in _plan(probes)
+
+    sc = spark.sparkContext
+    group = "ivf_pq_request_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        rows = search.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 9
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
+
+
 def test_pq_staleness_report_is_two_scans_into_cells_aggregate(spark, sf_dir):
     """The codebook-staleness monitor's contract shape (the drift
     monitor's sibling): per-snapshot map work (codebooks ride as

@@ -2423,6 +2423,74 @@ def test_sql_literal_helpers_bit_identical_to_f_lit(spark):
             longs_lit(bad)
 
 
+def test_probe_ranking_and_pair_distance_text_match_hof_reference(spark):
+    """ranked_probe_cells and _pair_sq_dist are SQL text parsed once;
+    their values and types must equal the Python-lambda HOF forms they
+    replace (kept here as the reference) — ties to the lower cell id,
+    NaN ranked last, nprobe beyond the cell count, -0.0 and +-Inf
+    distances included."""
+    import math
+    import struct
+
+    from pyspark.sql import functions as F
+
+    from etl_fuel_priceguide_ec2_spark.operators.clustering import (
+        ranked_probe_cells,
+    )
+    from etl_fuel_priceguide_ec2_spark.operators.similarity_index import (
+        _pair_sq_dist,
+    )
+
+    def hof_ranked(dists, cells, nprobe):
+        ranked = F.array_sort(
+            F.zip_with(
+                dists,
+                F.sequence(F.lit(0), F.lit(cells - 1)),
+                lambda d, i: F.struct(d.alias("d"), i.alias("cid")),
+            )
+        )
+        return F.transform(
+            F.slice(ranked, 1, nprobe), lambda s: s["cid"].cast("long")
+        )
+
+    def hof_pair(cv, qv):
+        return F.aggregate(
+            F.zip_with(cv, qv, lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, t: acc + t,
+        )
+
+    df = spark.createDataFrame(
+        [
+            (1, [0.5, 0.25, 0.5, 1.0], [1.0, -2.0, 0.0, 3.5]),
+            (2, [math.inf, 1.0, 1.0, math.nan], [-0.0, 0.1, 1e300, -1e-300]),
+            (3, [2.0, 2.0, -math.inf, -0.0], [0.0, 0.0, 0.0, 0.0]),
+        ],
+        "id bigint, d array<double>, q array<double>",
+    )
+    cols = []
+    for nprobe in (1, 2, 4, 6):
+        cols += [
+            ranked_probe_cells("d", 4, nprobe).alias(f"t{nprobe}"),
+            hof_ranked(F.col("d"), 4, nprobe).alias(f"h{nprobe}"),
+        ]
+    cols += [
+        _pair_sq_dist("d", "q").alias("tp"),
+        hof_pair(F.col("d"), F.col("q")).alias("hp"),
+    ]
+    out = df.select("id", *cols)
+    for nprobe in (1, 2, 4, 6):
+        assert out.schema[f"t{nprobe}"].dataType == out.schema[f"h{nprobe}"].dataType
+    assert out.schema["tp"].dataType == out.schema["hp"].dataType
+    rows = {r["id"]: r for r in out.collect()}
+    for r in rows.values():
+        for nprobe in (1, 2, 4, 6):
+            assert r[f"t{nprobe}"] == r[f"h{nprobe}"]
+        assert struct.pack(">d", r["tp"]) == struct.pack(">d", r["hp"])
+    assert rows[1]["t2"] == [1, 0]  # 0.25 first, then the 0.5 tie's lower id
+    assert rows[2]["t4"] == [1, 2, 0, 3]  # NaN ranks after +Inf
+
+
 def test_capstone_signals_parquet_roundtrip_decisions_equal(spark, sf_dir, tmp_path):
     """The production claim behind the capstone signal store: the seven
     signal relations are PERSISTED ingest state, and a decision refresh

@@ -39,7 +39,7 @@ rows = [
     (i, [float(x) for x in centers[i % 4] + rng.normal(size=8) * 0.3])
     for i in range(200)
 ]
-df = spark.createDataFrame(rows, "id bigint, v array<double>")
+df = spark.createDataFrame(rows, "id bigint, vec array<double>")
 q = df.filter("id < 5")
 records: list[tuple[str, str]] = []
 
@@ -71,51 +71,51 @@ def section(name, fn):
     return res
 
 
-cents = clustering.fit_centroids(df, "id", "v", k=4, iters=1)
+cents = clustering.fit_centroids(df, "id", "vec", k=4, iters=1)
 books = section(
     "fit_pq_codebooks(residuals_of)",
     lambda: clustering.fit_pq_codebooks(
-        df, "id", "v", m=4, ks=4, iters=1, residuals_of=cents
+        df, "id", "vec", m=4, ks=4, iters=1, residuals_of=cents
     ),
 )
 cb = section(
     "fit_two_level_codebooks",
-    lambda: clustering.fit_two_level_codebooks(df, "id", "v", k1=3, k2=3, iters=1),
+    lambda: clustering.fit_two_level_codebooks(df, "id", "vec", k1=3, k2=3, iters=1),
 )
 section(
     "cosine_topk_ivf2_sq8",
-    lambda: similarity.cosine_topk_ivf2_sq8(df, q, "id", "v", k=3, codebooks=cb),
+    lambda: similarity.cosine_topk_ivf2_sq8(df, q, "id", "vec", k=3, codebooks=cb),
 )
 section(
     "semantic_dedup_pairs_two_level",
     lambda: clustering.semantic_dedup_pairs_two_level(
-        df, "id", "v", threshold=1.0, codebooks=cb
+        df, "id", "vec", threshold=1.0, codebooks=cb
     ),
 )
 section(
     "pq_encode(residual)",
-    lambda: similarity.pq_encode(df, "id", "v", cents, books, residual=True),
+    lambda: similarity.pq_encode(df, "id", "vec", cents, books, residual=True),
 )
 section(
     "topk_ivf_pq(residual)",
     lambda: similarity.topk_ivf_pq(
-        df, q, "id", "v", k=3, m=4, ks=4, rerank_m=10,
+        df, q, "id", "vec", k=3, m=4, ks=4, rerank_m=10,
         centroids=cents, pq_codebooks=books, residual=True,
     ),
 )
 section(
     "pq_reconstruction_report(residual)",
     lambda: similarity.pq_reconstruction_report(
-        df, df.filter("id > 50"), "id", "v", cents, books, residual=True
+        df, df.filter("id > 50"), "id", "vec", cents, books, residual=True
     ),
 )
 section(
     "semantic_dedup_pairs",
-    lambda: clustering.semantic_dedup_pairs(df, "id", "v", k=4, centroids=cents),
+    lambda: clustering.semantic_dedup_pairs(df, "id", "vec", k=4, centroids=cents),
 )
 section(
     "cosine_topk_ivf_sq8",
-    lambda: similarity.cosine_topk_ivf_sq8(df, q, "id", "v", k=3, cells=4),
+    lambda: similarity.cosine_topk_ivf_sq8(df, q, "id", "vec", k=3, cells=4),
 )
 with open(out, "w") as f:
     for kind, text in records:
