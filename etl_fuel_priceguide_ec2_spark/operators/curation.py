@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import dedup, textops
+from .util import fan_out
 
 
 def corpus_curation_decision(
@@ -161,9 +162,11 @@ def corpus_curation_signals(
         if mat_out
         else (lambda df: df)
     )
-    docs = _mi(
-        corpus.select(F.col(id_col), F.col(text_col))
-    )  # five signal pipelines re-read the corpus; derive it once
+    # five signal pipelines re-read the corpus: derive it once, widened
+    # ONCE before the pin (util.fan_out's policy) — the shingle, k-gram
+    # and featurization helpers then find it at full parallelism and
+    # leave it as it is
+    docs = _mi(fan_out(corpus.select(F.col(id_col), F.col(text_col))))
     # ONE tokenize+shingle scan feeds both set-similarity miners (at
     # 100 TB each avoided re-shingling is a full corpus scan); this is
     # the same persistable state relation the LSH/gram stores use

@@ -24,6 +24,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
@@ -32,6 +33,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from etl_fuel_priceguide_ec2_spark.operators.util import fan_out
 
 MEDIA_SCHEMA = StructType(
     [
@@ -66,6 +69,27 @@ def to_media(df: DataFrame, id_col: str, text_col: str, mime: str = "application
         F.lit(mime).alias("mime"),
         F.octet_length(payload).cast("long").alias("n_bytes"),
         F.sha2(payload, 256).alias("sha"),
+    )
+
+
+def _synth_media(df: DataFrame, id_col: str, encode, mime: str) -> DataFrame:
+    """(doc_id, payload, mime) with ``payload = encode(doc_id)``, built
+    in an Arrow-batched pandas UDF: payload bytes are produced
+    executor-side and never visit the driver. The codec work is per-row
+    CPU, so this is where every ``to_*_media*`` producer widens its
+    input (:func:`util.fan_out`): a single-split fixture table would
+    otherwise serialize it onto one core (~40 s of entropy coding for
+    the size=64 JPEG fixture); at real scale the scan has thousands of
+    splits and the call is a no-op."""
+
+    @pandas_udf(BinaryType())
+    def _synth(ids: pd.Series) -> pd.Series:
+        return ids.map(lambda i: encode(int(i)))
+
+    return fan_out(df).select(
+        F.col(id_col).alias("doc_id"),
+        _synth(F.col(id_col)).alias("payload"),
+        F.lit(mime).alias("mime"),
     )
 
 
@@ -191,27 +215,16 @@ def to_audio_media(
 ) -> DataFrame:
     """Synthesize a REAL 16-bit mono PCM WAV payload per row (stdlib
     ``wave`` encoder over the deterministic integer sawtooth keyed on
-    the id — fixtures ship no real audio). Arrow-batched pandas UDF:
-    payload bytes are produced executor-side and never visit the
-    driver."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
+    the id — fixtures ship no real audio), via :func:`_synth_media`."""
     from etl_fuel_priceguide_ec2_spark.operators import audiocodec
 
-    @pandas_udf(BinaryType())
-    def _synth(ids: pd.Series) -> pd.Series:
-        return ids.map(
-            lambda i: audiocodec.encode_wav(
-                audiocodec.synth_sawtooth(int(i), n_samples), sample_rate
-            )
-        )
-
-    payload = _synth(F.col(id_col))
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        payload.alias("payload"),
-        F.lit("audio/wav").alias("mime"),
+    return _synth_media(
+        df,
+        id_col,
+        lambda i: audiocodec.encode_wav(
+            audiocodec.synth_sawtooth(i, n_samples), sample_rate
+        ),
+        "audio/wav",
     )
 
 
@@ -301,26 +314,17 @@ def to_audio_media_classed(
 ) -> DataFrame:
     """Synthesize class-structured WAV payloads (``synth_class_tone`` —
     same-class docs are perceptual near-dups) for the audio near-dup
-    family, the audio analogue of ``to_image_media``. Arrow-batched;
-    payload bytes never visit the driver."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
+    family, the audio analogue of ``to_image_media``
+    (:func:`_synth_media`)."""
     from etl_fuel_priceguide_ec2_spark.operators import audiocodec
 
-    @pandas_udf(BinaryType())
-    def _synth(ids: pd.Series) -> pd.Series:
-        return ids.map(
-            lambda i: audiocodec.encode_wav(
-                audiocodec.synth_class_tone(int(i), n_samples, classes),
-                sample_rate,
-            )
-        )
-
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        _synth(F.col(id_col)).alias("payload"),
-        F.lit("audio/wav").alias("mime"),
+    return _synth_media(
+        df,
+        id_col,
+        lambda i: audiocodec.encode_wav(
+            audiocodec.synth_class_tone(i, n_samples, classes), sample_rate
+        ),
+        "audio/wav",
     )
 
 
@@ -472,10 +476,7 @@ def to_image_media(
     stdlib-zlib DEFLATE — the format real corpora carry, r16). Same
     pixels whatever the container, so every decode-based consumer
     (aHash/pHash/resize/keep-lists) is format-invariant by
-    construction (test-pinned). Arrow-batched; payloads are produced
-    executor-side and never visit the driver."""
-    from pyspark.sql.functions import pandas_udf
-
+    construction (test-pinned). Built by :func:`_synth_media`."""
     from etl_fuel_priceguide_ec2_spark.operators import imagecodec
 
     encoders = {
@@ -486,15 +487,8 @@ def to_image_media(
     if fmt not in encoders:
         raise ValueError(f"fmt must be one of {sorted(encoders)}, got {fmt!r}")
     enc, mime = encoders[fmt]
-
-    @pandas_udf(BinaryType())
-    def _synth(ids: pd.Series) -> pd.Series:
-        return ids.map(lambda i: enc(synth_image(int(i), size, classes)))
-
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        _synth(F.col(id_col)).alias("payload"),
-        F.lit(mime).alias("mime"),
+    return _synth_media(
+        df, id_col, lambda i: enc(synth_image(i, size, classes)), mime
     )
 
 
@@ -510,9 +504,7 @@ def to_image_media_blocks(
     subspace where baseline JPEG is bit-EXACT (DC-only blocks; see the
     jpegcodec module docstring), so decode-based consumers stay
     oracle-able against a pure-SQL pixel replay even through a lossy
-    container. Arrow-batched; payloads never visit the driver."""
-    from pyspark.sql.functions import pandas_udf
-
+    container. Built by :func:`_synth_media`."""
     from etl_fuel_priceguide_ec2_spark.operators import jpegcodec
 
     q00 = int(jpegcodec.quant_tables(quality)[0][0, 0])
@@ -527,20 +519,15 @@ def to_image_media_blocks(
             "requires quality >= 77 with the Annex-K luma table"
         )
 
-    @pandas_udf(BinaryType())
-    def _synth(ids: pd.Series) -> pd.Series:
-        return ids.map(
-            lambda i: jpegcodec.encode_jpeg(
-                jpegcodec.synth_block_image(int(i), size, classes),
-                quality=quality,
-                grayscale=True,
-            )
-        )
-
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        _synth(F.col(id_col)).alias("payload"),
-        F.lit(jpegcodec.JPEG_MIME).alias("mime"),
+    return _synth_media(
+        df,
+        id_col,
+        lambda i: jpegcodec.encode_jpeg(
+            jpegcodec.synth_block_image(i, size, classes),
+            quality=quality,
+            grayscale=True,
+        ),
+        jpegcodec.JPEG_MIME,
     )
 
 
@@ -577,24 +564,16 @@ def to_video_media(
     """Synthesize a REAL uncompressed-AVI payload per row
     (``videocodec.synth_video_frames`` -> ``encode_avi``): frame f is
     the established ``synth_image(doc_id + f)`` pixels, so every frame
-    replays in SQL. Arrow-batched; payloads never visit the driver."""
-    from pyspark.sql.functions import pandas_udf
-
+    replays in SQL. Built by :func:`_synth_media`."""
     from etl_fuel_priceguide_ec2_spark.operators import videocodec
 
-    @pandas_udf(BinaryType())
-    def _synth(ids: pd.Series) -> pd.Series:
-        return ids.map(
-            lambda i: videocodec.encode_avi(
-                videocodec.synth_video_frames(int(i), n_frames, size, classes),
-                fps=fps,
-            )
-        )
-
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        _synth(F.col(id_col)).alias("payload"),
-        F.lit(videocodec.AVI_MIME).alias("mime"),
+    return _synth_media(
+        df,
+        id_col,
+        lambda i: videocodec.encode_avi(
+            videocodec.synth_video_frames(i, n_frames, size, classes), fps=fps
+        ),
+        videocodec.AVI_MIME,
     )
 
 

@@ -32,10 +32,11 @@ from etl_fuel_priceguide_ec2_spark.operators.clustering import (
 from etl_fuel_priceguide_ec2_spark.operators.similarity_index import (  # noqa: F401
     # re-exported: the fit/encode side moved to similarity_index
     # (VERDICT r14 item 7) — callers keep importing via this module
+    _cosine_side,
     _pair_sq_dist,
     _pair_sq_dist_sql,
+    _q8,
     _residual_sql,
-    _with_norm,
     pq_encode,
     pq_reconstruction_report,
     quantize_int8,
@@ -65,12 +66,8 @@ def cosine_topk(
     products, fully distributed, no shuffle of the corpus (ranking
     shuffles only (query_id, neighbor_id, score) triples).
     """
-    c = _with_norm(corpus, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("v").alias("cv"), F.col("norm").alias("cn")
-    )
-    q = _with_norm(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv"), F.col("norm").alias("qn")
-    )
+    c = _cosine_side(corpus, id_col, vec_col, True)
+    q = _cosine_side(queries, id_col, vec_col, False)
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
@@ -100,18 +97,9 @@ def cosine_topk_ivf(
     cells are the partition key, so a probe touches one partition's
     files instead of the corpus. Recall < 1.0 by construction (single
     probe); increase probes by unioning neighbor cells."""
-    c = _with_norm(corpus, id_col, vec_col, [cell_col]).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("norm").alias("cn"),
-        F.col(cell_col).alias("cell"),
-    )
-    q = _with_norm(queries, id_col, vec_col, [cell_col]).select(
-        F.col(id_col).alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qn"),
-        F.col(cell_col).alias("cell"),
-    )
+    c = _cosine_side(corpus, id_col, vec_col, True, cell_col)
+    q = _cosine_side(queries, id_col, vec_col, False, cell_col)
+    c, q = c.withColumnRenamed(cell_col, "cell"), q.withColumnRenamed(cell_col, "cell")
     scored = (
         c.join(F.broadcast(q), "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -187,17 +175,17 @@ def cosine_topk_rplsh(
         dim = len(corpus.select(vec_col).first()[0])
     hp = rng.standard_normal((planes, dim))
 
-    def _sig(df: DataFrame) -> DataFrame:
+    def _sig(df: DataFrame, vcol: str) -> DataFrame:
         # Loud dim check (ADVICE r02): with a wrong caller-supplied dim,
         # zip_with null-pads the mismatched arrays, the fold aggregates
         # to NULL, when(NULL >= 0) falls to otherwise(0), and every
         # signature silently collapses to bucket 0 — wrong AND slow with
         # no error. Fail the job instead.
-        v = F.when(F.size("v") == F.lit(dim), F.col("v")).otherwise(
+        v = F.when(F.size(vcol) == F.lit(dim), F.col(vcol)).otherwise(
             F.raise_error(
                 F.concat(
                     F.lit(f"cosine_topk_rplsh: vector width != dim={dim} (got "),
-                    F.size("v").cast("string"),
+                    F.size(vcol).cast("string"),
                     F.lit(")"),
                 )
             )
@@ -231,12 +219,8 @@ def cosine_topk_rplsh(
     # the 6-plane signature fold is shallow, and an A/B measured the
     # barrier a wash (2.11 vs 2.05 s at sf0.1) — re-expansion only
     # matters when the inlined tree is deep
-    c = _sig(_with_norm(corpus, id_col, vec_col)).select(
-        F.col(id_col).alias("neighbor_id"), F.col("v").alias("cv"), F.col("norm").alias("cn"), "sig"
-    )
-    q = _sig(_with_norm(queries, id_col, vec_col)).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv"), F.col("norm").alias("qn"), "sig"
-    )
+    c = _sig(_cosine_side(corpus, id_col, vec_col, True), "cv")
+    q = _sig(_cosine_side(queries, id_col, vec_col, False), "qv")
     # multiprobe: expand each query to every signature within hamming<=r
     probe_sigs = [0]
     if multiprobe_hamming >= 1:
@@ -289,11 +273,11 @@ def cosine_topk_int8(
     persist `quantize_int8`'s output as the stored column and re-rank
     the top-k with full precision if exactness matters.
     """
-    c = quantize_int8(corpus, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("q8").alias("cq")
+    c = _cosine_side(corpus, id_col, vec_col, True).select(
+        "neighbor_id", _q8("cv", "cn").alias("cq")
     )
-    q = quantize_int8(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("q8").alias("qq")
+    q = _cosine_side(queries, id_col, vec_col, False).select(
+        "query_id", _q8("qv", "qn").alias("qq")
     )
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
@@ -362,7 +346,7 @@ def cosine_topk_ivf_sq8(
             F.lit(None).cast("double").alias("approx_cosine"),
         ).filter(F.lit(False))
     cells = len(centroids)
-    _dists = sq_dists_expr  # string fast path: "v" + raw matrix
+    _dists = sq_dists_expr  # string fast path: column text + raw matrix
 
     # corpus: primary cell (argmin, ties to lower index) + int8 code.
     # plan_barrier stops CollapseProject and the join-side predicate/
@@ -370,24 +354,18 @@ def cosine_topk_ivf_sq8(
     # every reference (see cosine_topk_ivf2_sq8, where the deeper tree
     # made this a measured 7x; here the single-level tree still
     # re-evaluates ~3x without it)
-    cb = _with_norm(corpus, id_col, vec_col)
-    cd = _dists("v", centroids)
-    c = plan_barrier(cb.select(
-        F.col(id_col).alias("neighbor_id"),
+    cd = _dists("cv", centroids)
+    c = plan_barrier(_cosine_side(corpus, id_col, vec_col, True).select(
+        "neighbor_id",
         (F.array_position(cd, F.array_min(cd)) - 1).cast("long").alias("cell"),
-        F.transform("v", lambda x: F.round(x / F.col("norm") * 127).cast("long")).alias(
-            "cq"
-        ),
+        _q8("cv", "cn").alias("cq"),
     ))
     # queries: nprobe nearest cells + int8 code
-    qb = _with_norm(queries, id_col, vec_col)
-    qd = sq_dists_sql("v", mat_sql(centroids))
-    q = qb.select(
-        F.col(id_col).alias("query_id"),
+    qd = sq_dists_sql("qv", mat_sql(centroids))
+    q = _cosine_side(queries, id_col, vec_col, False).select(
+        "query_id",
         F.explode(ranked_probe_cells(qd, cells, nprobe)).alias("cell"),
-        F.transform("v", lambda x: F.round(x / F.col("norm") * 127).cast("long")).alias(
-            "qq"
-        ),
+        _q8("qv", "qn").alias("qq"),
     )
     scored = (
         c.join(F.broadcast(q), "cell")
@@ -447,12 +425,8 @@ def cosine_topk_ivf_sq8_rerank(
         nprobe=nprobe,
         centroids=centroids,
     ).select("query_id", "neighbor_id")
-    c = _with_norm(corpus, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("v").alias("cv"), F.col("norm").alias("cn")
-    )
-    q = _with_norm(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv"), F.col("norm").alias("qn")
-    )
+    c = _cosine_side(corpus, id_col, vec_col, True)
+    q = _cosine_side(queries, id_col, vec_col, False)
     rescored = (
         cand.join(c, "neighbor_id")
         .join(F.broadcast(q), "query_id")
@@ -536,33 +510,30 @@ def cosine_topk_ivf2_sq8(
         # ties to the lower cell index (first array_position match)
         return (F.array_position(d, F.array_min(d)) - 1).cast("long")
 
-    # v minus its primary coarse centroid (the _b1 column, 0-based)
-    resid = F.expr(residual_sql("v", "CAST(_b1 + 1 AS INT)", mat_sql(c1)))
-
-    q8code = F.transform("v", lambda x: F.round(x / F.col("norm") * 127).cast("long"))
+    def resid(v):
+        # v minus its primary coarse centroid (the _b1 column, 0-based)
+        return F.expr(residual_sql(v, "CAST(_b1 + 1 AS INT)", mat_sql(c1)))
 
     # corpus: ONE composite cell (primary coarse, primary residual) + int8
-    cb = _with_norm(corpus, id_col, vec_col)
-    b1 = _primary(_dists("v", c1))
-    cb = cb.withColumn("_b1", b1).withColumn("_r", resid)
+    cb = _cosine_side(corpus, id_col, vec_col, True)
+    cb = cb.withColumn("_b1", _primary(_dists("cv", c1))).withColumn("_r", resid("cv"))
     # plan_barrier: without it, CollapseProject + join-side predicate/
     # hash generation re-expand the nested d1 -> residual -> d2
     # assignment tree into every reference (~4 evaluations per corpus
     # row; measured join 2.11 -> 0.30 s at sf0.1, identical output).
     c = plan_barrier(cb.select(
-        F.col(id_col).alias("neighbor_id"),
+        "neighbor_id",
         (F.col("_b1") * k2 + _primary(_dists("_r", c2))).alias("cell"),
-        q8code.alias("cq"),
+        _q8("cv", "cn").alias("cq"),
     ))
     # queries: top-nprobe composite cells by combined d1 + d2 (ties to
     # the lower (coarse, residual) index pair, matching the oracle's
     # ORDER BY dsum, b1, b2)
-    qb = _with_norm(queries, id_col, vec_col)
-    qb1 = _primary(_dists("v", c1))
     qb = (
-        qb.withColumn("_b1", qb1)
-        .withColumn("_r", resid)
-        .withColumn("_d1", _dists("v", c1))
+        _cosine_side(queries, id_col, vec_col, False)
+        .withColumn("_b1", _primary(_dists("qv", c1)))
+        .withColumn("_r", resid("qv"))
+        .withColumn("_d1", _dists("qv", c1))
         .withColumn("_d2", _dists("_r", c2))
     )
     pair_scores = F.flatten(
@@ -585,9 +556,9 @@ def cosine_topk_ivf2_sq8(
         lambda s: s["b1"] * k2 + s["b2"],
     )
     q = qb.select(
-        F.col(id_col).alias("query_id"),
+        "query_id",
         F.explode(top_cells).alias("cell"),
-        q8code.alias("qq"),
+        _q8("qv", "qn").alias("qq"),
     )
     scored = (
         c.join(F.broadcast(q), "cell")
@@ -879,9 +850,9 @@ def exact_sq_topk(
     fold the distance per (candidate, query) pair, W1 window cut with
     the id tiebreak. Deliberately O(|corpus| x |queries|): correct use
     is a BOUNDED query sample (recall evaluation), never serving."""
-    # fan_out: the single-row-group fixture shape would otherwise run
-    # the O(|corpus| x |queries|) fold on one core (code-review r14 —
-    # the cosine brute-force sibling already goes through fan_out)
+    # the corpus side widens (util.fan_out's policy), the query sample
+    # does not: the single-row-group fixture shape would otherwise run
+    # the O(|corpus| x |queries|) fold on one core
     c = fan_out(corpus).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
@@ -1091,16 +1062,12 @@ def cosine_topk_zorder(
         F.col(zid_col).alias("_zid"),
         F.expr(f"shiftright(`{z_col}`, {shift})").alias("_bucket"),
     )
-    c = _with_norm(corpus, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("norm").alias("cn"),
-    ).join(zb.withColumnRenamed("_zid", "neighbor_id"), "neighbor_id")
-    q = _with_norm(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qn"),
-    ).join(zb.withColumnRenamed("_zid", "query_id"), "query_id")
+    c = _cosine_side(corpus, id_col, vec_col, True).join(
+        zb.withColumnRenamed("_zid", "neighbor_id"), "neighbor_id"
+    )
+    q = _cosine_side(queries, id_col, vec_col, False).join(
+        zb.withColumnRenamed("_zid", "query_id"), "query_id"
+    )
     probes = q.select(
         "query_id",
         "qv",

@@ -59,25 +59,39 @@ def _pair_sq_dist(cv: str, qv: str):
     return F.expr(_pair_sq_dist_sql(cv, qv))
 
 
-def _with_norm(df: DataFrame, id_col: str, vec_col: str, extra: list[str] | None = None) -> DataFrame:
-    df = fan_out(df)
-    return df.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        *[F.col(c) for c in extra or []],
-    ).withColumn("norm", F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x)))
+def _cosine_side(
+    df: DataFrame, id_col: str, vec_col: str, corpus: bool, *extra: str
+) -> DataFrame:
+    """One side of a cosine rung: (neighbor_id, cv, cn, *extra) for the
+    corpus, (query_id, qv, qn, *extra) for the query batch — the id,
+    the vector as ``array<double>`` and its L2 norm. The rung family's
+    parallelism policy lives here (:func:`util.fan_out`): the corpus
+    side is widened, the query batch — a handful of rows, broadcast or
+    probed — is projected as it is."""
+    i, v, n = ("neighbor_id", "cv", "cn") if corpus else ("query_id", "qv", "qn")
+    base = (fan_out(df) if corpus else df).select(
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"), *extra
+    )
+    return base.select(
+        F.col(id_col).alias(i),
+        F.col("v").alias(v),
+        F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x)).alias(n),
+        *extra,
+    )
+
+
+def _q8(v: str, norm: str):
+    """The int8 code of vector column ``v`` with L2 norm ``norm``:
+    round(x / norm * 127) per component."""
+    return F.transform(v, lambda x: F.round(x / F.col(norm) * 127).cast("long"))
 
 
 def quantize_int8(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """(id, q8: array<long of int8 values>) — unit-normalized scalar
     quantization. Kept as a separate op so the quantized column can be
     written once and scanned many times (the point of quantizing)."""
-    normed = _with_norm(df, id_col, vec_col)
-    return normed.select(
-        F.col(id_col),
-        F.transform(
-            "v", lambda x: F.round(x / F.col("norm") * 127).cast("long")
-        ).alias("q8"),
+    return _cosine_side(df, id_col, vec_col, True).select(
+        F.col("neighbor_id").alias(id_col), _q8("cv", "cn").alias("q8")
     )
 
 
@@ -109,20 +123,22 @@ def pq_encode(
     if dim % m:  # same guard as topk_ivf_pq: a silent sub = dim//m
         # would lossily drop the trailing dims from every code
         raise ValueError(f"dim {dim} not divisible into {m} subspaces")
-    if id_col in ("v", "norm", "cell", "_rv") or id_col in {
+    if id_col in ("v", "cell", "_rv") or id_col in {
         f"code{s}" for s in range(m)
     }:
         # the projections below would produce duplicate column names
-        # (internal v/norm/cell/_rv, or the generated code0..code{m-1}
+        # (internal v/cell/_rv, or the generated code0..code{m-1}
         # output aliases — ADVICE r14) and the residual stage's
         # `cell`/`_rv` references would resolve ambiguously — collide
         # loudly up front (the sq_dists_sql enforcement pattern)
         raise ValueError(
             f"pq_encode: id_col {id_col!r} collides with an internal "
-            f"or generated column name (v/norm/cell/_rv/code0..code{m - 1})"
+            f"or generated column name (v/cell/_rv/code0..code{m - 1})"
         )
     sub = dim // m
-    cb = _with_norm(corpus, id_col, vec_col)
+    cb = fan_out(corpus).select(
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
+    )
     cd = sq_dists_expr("v", centroids)
     cell_col = (F.array_position(cd, F.array_min(cd)) - 1).cast("long").alias("cell")
     src = "v"

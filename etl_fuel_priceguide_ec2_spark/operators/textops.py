@@ -1168,7 +1168,8 @@ def bigram_logprob_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    bg = fan_out(df).select(F.col(id_col), F.explode(grams).alias("g"))
+    df = fan_out(df)
+    bg = df.select(F.col(id_col), F.explode(grams).alias("g"))
     big = bg.groupBy("g").agg(F.count(F.lit(1)).alias("c_uv"))
     # C(u,.) = sum_v C(u,v): derive the context counts from the
     # vocabulary-sized bigram-count relation instead of a SECOND full
@@ -1184,8 +1185,7 @@ def bigram_logprob_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame
         .agg(F.sum("c_uv").alias("c_u"))
     )
     vocab = (
-        fan_out(df)
-        .select(F.explode(toks).alias("t"))
+        df.select(F.explode(toks).alias("t"))
         .filter(F.col("t") != "")
         .agg(F.count_distinct("t").alias("nv"))
     )

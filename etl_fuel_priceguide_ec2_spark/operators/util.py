@@ -7,8 +7,6 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
-_DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
-
 
 def _double_sql(x: float) -> str:
     # repr() is the shortest round-trip form; Spark's parser reads it
@@ -263,16 +261,6 @@ def mat_lit(rows) -> Column:
     return F.expr(mat_sql(rows))
 
 
-def _max_partition_bytes(df: DataFrame) -> int:
-    raw = df.sparkSession.conf.get(
-        "spark.sql.files.maxPartitionBytes", str(_DEFAULT_MAX_PARTITION_BYTES)
-    )
-    try:
-        return int(str(raw).lower().rstrip("b"))
-    except ValueError:
-        return _DEFAULT_MAX_PARTITION_BYTES
-
-
 def _total_file_bytes(df: DataFrame, files: list[str]) -> int | None:
     """Sum file sizes via the Hadoop FS API (works for any scheme the
     session can read). None if any file can't be statted."""
@@ -290,7 +278,7 @@ def _total_file_bytes(df: DataFrame, files: list[str]) -> int | None:
     return total
 
 
-def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Ensure CPU-heavy per-row stages get cluster-wide parallelism.
 
     Small fixture tables arrive as a single parquet row group → one
@@ -301,14 +289,31 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     than the cluster's parallelism — never an extra shuffle on big
     inputs).
 
+    The parallelism policy — the one place the engine decides it:
+
+    - The operator that does the per-row CPU work calls ``fan_out`` on
+      the corpus relation it was handed, at most once per relation.
+    - A query batch is never widened: it is a handful of rows, broadcast
+      or probed, and a round-robin shuffle of it is one more job of pure
+      scheduling cost per request.
+    - A registry builder or other caller never widens; it hands the
+      operator the plain relation.
+    - A relation an enclosing operator already widened and checkpointed
+      is not widened again: it is already at ``defaultParallelism``
+      partitions, and this call returns it unchanged. A nested call on
+      a widened but lazy relation adds a second ``Repartition`` that
+      Catalyst's CollapseRepartition folds into one exchange.
+
     The split estimate is planner-informed, not RDD-probed: a
     ``df.rdd.getNumPartitions()`` probe forces a full plan→RDD
     conversion on the driver (~0.1 s per fresh DataFrame, measured —
     it dominated the build time of cheap ANN queries), while
     ``inputFiles()`` + a Hadoop-FS size stat costs ~10 ms. Each file
-    yields at least one split, plus one split per maxPartitionBytes of
-    input; the RDD probe remains only as the fallback for non-file
-    relations (in-memory, post-join) where no file listing exists.
+    yields at least one split, plus one split per
+    ``spark.sql.files.maxPartitionBytes`` (as the session parses it,
+    units included) of input; the RDD probe remains only as the
+    fallback for non-file relations (in-memory, post-join,
+    checkpointed) where no file listing exists.
     """
     if df.isStreaming:
         # streaming relations can't be partition-probed (df.rdd is a
@@ -316,8 +321,7 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
         # partitioning per micro-batch — pass through untouched so every
         # map-only operator here stays streaming-compatible
         return df
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         files = df.inputFiles()
     except Exception:
@@ -327,8 +331,12 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
             return df  # >= one split per file: already wide enough
         total = _total_file_bytes(df, files)
         if total is not None:
-            est_splits = len(files) + total // _max_partition_bytes(df)
-            if est_splits >= target:
+            split = (
+                df.sparkSession._jsparkSession.sessionState()
+                .conf()
+                .filesMaxPartitionBytes()
+            )
+            if len(files) + total // split >= target:
                 return df  # big files split by maxPartitionBytes
             return df.repartition(target)
     # non-file relation (or stat failure): exact probe as fallback

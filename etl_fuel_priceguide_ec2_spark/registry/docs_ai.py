@@ -10,7 +10,6 @@ from etl_fuel_priceguide_ec2_spark.operators import (
     similarity,
     textops,
 )
-from etl_fuel_priceguide_ec2_spark.operators.util import fan_out
 from etl_fuel_priceguide_ec2_spark.sources.catalog import load_table
 
 # ---------------------------------------------------------------------------
@@ -238,7 +237,7 @@ def q_audio_waveform_stats(spark, sf_dir):
     aggregates — peak/RMS match exactly because the signal is trig-free
     integer math and the energy sum is exact int64."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = multimodal.to_audio_media(fan_out(docs), "doc_id", n_samples=4000, sample_rate=8000)
+    media = multimodal.to_audio_media(docs, "doc_id", n_samples=4000, sample_rate=8000)
     return multimodal.audio_waveform_stats(media)
 
 
@@ -270,7 +269,7 @@ def q_audio_zero_crossings(spark, sf_dir):
     regenerates the sawtooth samples and replays the flag-flip count
     with one LAG window."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = multimodal.to_audio_media(fan_out(docs), "doc_id", n_samples=4000, sample_rate=8000)
+    media = multimodal.to_audio_media(docs, "doc_id", n_samples=4000, sample_rate=8000)
     return multimodal.audio_zero_crossings(media)
 
 
@@ -330,7 +329,7 @@ def q_image_ahash_near_pairs(spark, sf_dir):
     in SQL; the Spark side gets the pixels by actually decoding the
     binary payloads, so the codec round trip is what's being verified."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = multimodal.to_image_media(fan_out(docs), "doc_id", size=16, classes=100)
+    media = multimodal.to_image_media(docs, "doc_id", size=16, classes=100)
     hashes = multimodal.image_ahash(media)
     return multimodal.image_ahash_pairs(hashes, max_hamming=3)
 
@@ -376,7 +375,7 @@ def q_image_ahash_keeplist(spark, sf_dir):
     ``image_ahash_pairs_from_state`` mines the same pairs from slices
     of it without re-decoding payloads (state-reuse pinned by test)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = multimodal.to_image_media(fan_out(docs), "doc_id", size=16, classes=100)
+    media = multimodal.to_image_media(docs, "doc_id", size=16, classes=100)
     return multimodal.band_keeplist(docs, multimodal.image_ahash(media))
 
 
@@ -467,7 +466,7 @@ def q_image_phash_near_pairs(spark, sf_dir):
     replays the identical integer spectrum math in SQL; the Spark side
     earns its pixels through the real codec round trip."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = multimodal.to_image_media(fan_out(docs), "doc_id", size=16, classes=100)
+    media = multimodal.to_image_media(docs, "doc_id", size=16, classes=100)
     hashes = multimodal.image_phash(media)
     return multimodal.image_ahash_pairs(hashes, max_hamming=3)
 
@@ -516,7 +515,7 @@ def q_image_phash_keeplist(spark, sf_dir):
     PPM codec round trip; the oracle regenerates pixels and replays
     the integer DCT spectrum, then the identical recursive CC."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = multimodal.to_image_media(fan_out(docs), "doc_id", size=16, classes=100)
+    media = multimodal.to_image_media(docs, "doc_id", size=16, classes=100)
     return multimodal.band_keeplist(docs, multimodal.image_phash(media))
 
 
@@ -580,7 +579,7 @@ def q_audio_fingerprint_near_pairs(spark, sf_dir):
     verified. Only 4 longs per clip ever shuffle."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     media = multimodal.to_audio_media_classed(
-        fan_out(docs), "doc_id", n_samples=4000, classes=100
+        docs, "doc_id", n_samples=4000, classes=100
     )
     fp = multimodal.audio_fingerprint(media)
     return multimodal.image_ahash_pairs(fp, max_hamming=3)
@@ -622,7 +621,7 @@ def q_audio_fingerprint_keeplist(spark, sf_dir):
     is the persistable ingest state; payloads decode once."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     media = multimodal.to_audio_media_classed(
-        fan_out(docs), "doc_id", n_samples=4000, classes=100
+        docs, "doc_id", n_samples=4000, classes=100
     )
     return multimodal.band_keeplist(docs, multimodal.audio_fingerprint(media))
 
@@ -650,7 +649,7 @@ def q_image_ahash_keeplist_png(spark, sf_dir):
     (r16; PPM/BMP were the bootstrap formats)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     media = multimodal.to_image_media(
-        fan_out(docs), "doc_id", size=16, classes=100, fmt="png"
+        docs, "doc_id", size=16, classes=100, fmt="png"
     )
     return multimodal.band_keeplist(docs, multimodal.image_ahash(media))
 
@@ -733,12 +732,8 @@ def q_image_ahash_keeplist_jpeg(spark, sf_dir):
     only 2 effective bits — ~1250-doc buckets and a 12M-candidate pair
     join, measured 20.5 s; this form is the PPM row's blocking)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    # fan_out BEFORE the codec stage: the fixture table is one parquet
-    # split, which would serialize ~40 s of per-payload entropy-coding
-    # work (64 blocks/image at size=64) onto one core; at real scale
-    # the scan has thousands of splits and this is a no-op
     media = multimodal.to_image_media_blocks(
-        fan_out(docs), "doc_id", size=64, classes=100
+        docs, "doc_id", size=64, classes=100
     )
     return multimodal.band_keeplist(docs, multimodal.image_ahash(media))
 
@@ -802,6 +797,6 @@ def q_video_frame_ahash_sample(spark, sf_dir):
     is verified."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     media = multimodal.to_video_media(
-        fan_out(docs), "doc_id", n_frames=4, size=16, classes=100
+        docs, "doc_id", n_frames=4, size=16, classes=100
     )
     return multimodal.video_frame_ahash(media, every_nth=2)

@@ -686,6 +686,45 @@ def test_ivf_pq_guards_internal_names_and_quotes_identifiers(spark):
         assert sorted(map(tuple, quoted.collect())) == want and len(want) == 24
 
 
+def test_ivf_pq_requests_leave_no_global_temp_views(spark):
+    """util.sql_over_frames binds a request's frames as GLOBAL temp
+    views for its one analysis pass; none may outlive the call — not
+    after many requests, and not after one whose analysis fails (a
+    vec_col that does not exist passes the name guard and fails inside
+    session.sql)."""
+    import random
+
+    from pyspark.errors import AnalysisException
+
+    from etl_fuel_priceguide_ec2_spark.operators import clustering, similarity
+
+    rng = random.Random(11)
+    rows = [(i, [rng.gauss(i % 3, 0.4) for _ in range(8)]) for i in range(40)]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    cents = clustering.fit_centroids(emb, "vec_id", "embedding", k=3, iters=1)
+    books = clustering.fit_pq_codebooks(emb, "vec_id", "embedding", m=4, ks=4, iters=1)
+    codes = similarity.pq_encode(emb, "vec_id", "embedding", cents, books)
+    db = spark.conf.get("spark.sql.globalTempDatabase", "global_temp")
+
+    def views():
+        return sorted(t.name for t in spark.catalog.listTables(db))
+
+    before = views()
+
+    def search(vec_col, n):
+        return similarity.topk_ivf_pq(
+            emb, emb.filter(F.col("vec_id") < n), "vec_id", vec_col,
+            k=3, nprobe=2, m=4, ks=4, rerank_m=8, centroids=cents,
+            pq_codebooks=books, codes=codes,
+        )
+
+    for n in range(2, 7):
+        assert len(search("embedding", n).collect()) == 3 * n
+    with pytest.raises(AnalysisException):
+        search("no_such_vec", 3)
+    assert views() == before
+
+
 def test_ivf_pq_residual_refinement(spark, sf_dir):
     """The classical IVF,PQ residual form (codes over v - own-cell
     centroid; per-cell query ADC tables): reconstruction error is

@@ -1075,3 +1075,215 @@ def test_kfold_manifest_inherits_the_sharder_shape(spark, sf_dir):
     assert len(re.findall(r"\(\d+\) Exchange rangepartitioning", plan)) <= 1
     for m in re.finditer(r"Window \[[^\]]*partitionBy=\[([^\]]*)\]", plan):
         assert "shard" not in m.group(1) and "fold" not in m.group(1)
+
+
+# -- the parallelism policy (util.fan_out) ----------------------------------
+
+
+def _round_robin_inputs(df) -> list[str]:
+    """The input subtree (optimized plan text) of every round-robin
+    ``Repartition`` in ``df``'s optimized plan."""
+    found = []
+
+    def walk(node):
+        if node.nodeName() == "Repartition" and node.shuffle():
+            found.append(node.child().toString())
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().optimizedPlan())
+    return found
+
+
+def test_fan_out_widens_a_single_file_scan_once(spark, sf_dir, tmp_path):
+    """fan_out's decisions, pinned directly: a one-file scan plans ONE
+    round-robin exchange to defaultParallelism; a relation that is
+    already wide enough — enough files, a streaming source, or a
+    checkpoint already at the target — comes back as the same object;
+    and a nested call adds no exchange (CollapseRepartition folds it),
+    which is what lets a helper keep its own call on a relation its
+    enclosing operator already widened."""
+    from etl_fuel_priceguide_ec2_spark.operators.util import fan_out
+
+    target = spark.sparkContext.defaultParallelism
+    docs = load_table(spark, sf_dir, "documents")
+    assert len(docs.inputFiles()) == 1
+    plan = _plan(fan_out(docs))
+    assert plan.count("RoundRobinPartitioning") == 1
+    assert f"RoundRobinPartitioning({target})" in plan
+
+    path = str(tmp_path / "many_files")
+    docs.repartition(target).write.parquet(path)
+    many = spark.read.parquet(path)
+    assert len(many.inputFiles()) >= target
+    assert fan_out(many) is many
+
+    stream = spark.readStream.format("rate").load()
+    assert fan_out(stream) is stream
+
+    pinned = docs.repartition(target).localCheckpoint(eager=True)
+    assert fan_out(pinned) is pinned
+
+    twice = fan_out(fan_out(docs))
+    projected = fan_out(fan_out(docs).select("doc_id", "text"))
+    for nested in (twice, projected):
+        assert _plan(nested).count("RoundRobinPartitioning") == 1
+
+
+def test_fan_out_reads_max_partition_bytes_as_the_session_parses_it(
+    spark, sf_dir, monkeypatch
+):
+    """spark.sql.files.maxPartitionBytes takes units ("64m", "1g",
+    "1k"); fan_out must read the value the session parsed, not the raw
+    string. With the file total stubbed at (target - 1) x 128 MiB, a
+    one-file relation splits into >= target pieces under 1k, 64m and
+    128m (left as is) but into one under 1g (widened)."""
+    from etl_fuel_priceguide_ec2_spark.operators import util
+
+    target = spark.sparkContext.defaultParallelism
+    monkeypatch.setattr(
+        util, "_total_file_bytes", lambda df, files: (target - 1) * (128 << 20)
+    )
+    docs = load_table(spark, sf_dir, "documents")
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        for raw, widened in (("1k", False), ("64m", False), ("128m", False),
+                             ("1g", True)):
+            spark.conf.set(key, raw)
+            assert (util.fan_out(docs) is not docs) == widened, raw
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_cosine_rungs_widen_the_corpus_never_the_query_batch(spark, sf_dir):
+    """Every cosine rung (and the int8 rung) widens its corpus side
+    and projects its query batch as it is: no round-robin Repartition
+    sits above the query filter, and there is exactly one per corpus
+    side (two for the rerank rung, whose candidate stage and rerank each
+    read the corpus). The registry rows built on them plan 1, 1 and 2
+    round-robin exchanges (2, 2 and 4 while the query side widened)."""
+    import re
+
+    from etl_fuel_priceguide_ec2_spark.operators import clustering, similarity
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 7)
+    cents = clustering.fit_centroids(emb, "vec_id", "embedding", k=4, iters=1)
+    books = clustering.fit_two_level_codebooks(
+        emb, "vec_id", "embedding", k1=3, k2=3, iters=1
+    )
+    zkeys = emb.select("vec_id", (F.col("vec_id") * 7919).alias("z"))
+    args = (emb, queries, "vec_id", "embedding")
+    rungs = {
+        "cosine_topk": (similarity.cosine_topk(*args, k=3), 1),
+        "ivf": (similarity.cosine_topk_ivf(*args, "label", k=3), 1),
+        "rplsh": (similarity.cosine_topk_rplsh(*args, k=3, dim=64), 1),
+        "int8": (similarity.cosine_topk_int8(*args, k=3), 1),
+        "ivf_sq8": (
+            similarity.cosine_topk_ivf_sq8(*args, k=3, centroids=cents), 1
+        ),
+        "ivf_sq8_rerank": (
+            similarity.cosine_topk_ivf_sq8_rerank(
+                *args, k=3, rerank_m=6, centroids=cents
+            ),
+            2,
+        ),
+        "ivf2_sq8": (
+            similarity.cosine_topk_ivf2_sq8(*args, k=3, codebooks=books), 1
+        ),
+        "zorder": (similarity.cosine_topk_zorder(*args, zkeys, k=3), 1),
+    }
+    query_filter = re.compile(r"vec_id#\d+L? < 7\)")
+    for name, (df, corpus_sides) in rungs.items():
+        inputs = _round_robin_inputs(df)
+        assert len(inputs) == corpus_sides, (name, inputs)
+        assert not any(query_filter.search(t) for t in inputs), name
+
+    for name, want in (
+        ("similarity_topk", 1),
+        ("similarity_topk_ivf_sq8", 1),
+        ("similarity_topk_ivf_sq8_rerank", 2),
+    ):
+        plan = _plan(registry.queries()[name](spark, sf_dir))
+        assert plan.count("RoundRobinPartitioning") == want, name
+
+
+def test_curation_signals_widen_the_corpus_once(spark, sf_dir, monkeypatch):
+    """corpus_curation_signals widens its corpus projection ONCE, before
+    the pin every signal pipeline reads; the shingle, k-gram and
+    featurization helpers then find the checkpoint at full parallelism
+    and leave it as it is (they each re-widened it before, 3 repartitions
+    per call)."""
+    import sys
+
+    from etl_fuel_priceguide_ec2_spark.operators import curation, textops, util
+    from etl_fuel_priceguide_ec2_spark.registry.curation import (
+        _DOMAIN_LEXICON,
+        _QC_LEXICON,
+    )
+
+    real, widened = util.fan_out, []
+
+    def _counting(df):
+        out = real(df)
+        if out is not df:
+            widened.append(df)
+        return out
+
+    for mod in list(sys.modules.values()):
+        if (getattr(mod, "__name__", "").startswith("etl_fuel_priceguide_ec2_spark")
+                and getattr(mod, "fan_out", None) is real):
+            monkeypatch.setattr(mod, "fan_out", _counting)
+    qlex = spark.createDataFrame(_QC_LEXICON, "term string, weight string")
+    dlex = spark.createDataFrame(
+        [(c, t, str(w)) for c, t, w in _DOMAIN_LEXICON],
+        "class string, term string, weight string",
+    )
+    docs = load_table(spark, sf_dir, "documents")
+    curation.corpus_curation_signals(
+        docs, "doc_id", "text",
+        textops.quality_classifier_weights(
+            qlex.selectExpr("term", "CAST(weight AS DECIMAL(12,6)) AS weight"),
+            n_buckets=64,
+        ),
+        textops.domain_classifier_weights(
+            dlex.selectExpr(
+                "class", "term", "CAST(weight AS DECIMAL(12,6)) AS weight"
+            ),
+            n_buckets=64,
+        ),
+        n_buckets=64,
+        materialize="intermediates",
+    )
+    assert len(widened) == 1
+
+
+def test_registry_builders_never_widen(spark, sf_dir):
+    """No registry module calls or imports fan_out (the operator that
+    does the per-row work widens), and a lazy media row's one
+    round-robin exchange is the producer's, directly over the documents
+    id scan."""
+    import ast
+    import inspect
+    import pkgutil
+
+    import etl_fuel_priceguide_ec2_spark.registry as reg
+
+    for info in pkgutil.iter_modules(reg.__path__):
+        mod = __import__(f"{reg.__name__}.{info.name}", fromlist=["_"])
+        names = {
+            n.id if isinstance(n, ast.Name) else n.name
+            for n in ast.walk(ast.parse(inspect.getsource(mod)))
+            if isinstance(n, (ast.Name, ast.alias))
+        }
+        assert "fan_out" not in names, info.name
+    for name in (
+        "audio_waveform_stats", "audio_zero_crossings", "video_frame_ahash_sample"
+    ):
+        inputs = _round_robin_inputs(registry.queries()[name](spark, sf_dir))
+        assert len(inputs) == 1, (name, inputs)
+        lines = inputs[0].splitlines()
+        assert lines[0].startswith("Project [doc_id#"), (name, inputs)
+        assert len(lines) == 2 and "Relation [doc_id#" in lines[1], (name, inputs)
